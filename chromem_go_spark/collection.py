@@ -1058,14 +1058,9 @@ class Collection:
             max_points=max_points,
         )
         if self.persist_dir:
-            import json
-
             path = self._hnsw_index_path()
             idx.save(path)  # atomic (single npz replace)
-            meta_file = os.path.join(path, "_index_meta.json")
-            with open(meta_file + ".tmp", "w") as f:
-                json.dump({"signature": self._embedding_signature()}, f)
-            os.replace(meta_file + ".tmp", meta_file)
+            self._commit_index_meta(path)
         return idx
 
     def load_hnsw_index(self):
@@ -1074,21 +1069,33 @@ class Collection:
         signature no longer matches the table — a stale graph must
         never serve live queries (same refusal contract as
         :meth:`load_text_index`)."""
-        import json
+        if self._fresh_index_meta(self._hnsw_index_path) is None:
+            return None
+        from .operators.hnsw import HNSWIndex
 
+        return HNSWIndex.load(self._hnsw_index_path())
+
+    def _commit_index_meta(self, path: str, **meta) -> None:
+        """Write a vector index's ``_index_meta.json`` — its commit
+        point — stamped with the current (id, embedding) signature."""
+        meta_file = os.path.join(path, "_index_meta.json")
+        with open(meta_file + ".tmp", "w") as f:
+            json.dump({**meta, "signature": self._embedding_signature()}, f)
+        os.replace(meta_file + ".tmp", meta_file)
+
+    def _fresh_index_meta(self, path_of) -> dict | None:
+        """The ``_index_meta.json`` of the vector index at ``path_of()``,
+        or ``None`` on a non-persistent collection, when there is none,
+        or when its (id, embedding) signature no longer matches the
+        table — a stale index must never serve live queries."""
         if not self.persist_dir:
             return None
-        path = self._hnsw_index_path()
-        meta_file = os.path.join(path, "_index_meta.json")
+        meta_file = os.path.join(path_of(), "_index_meta.json")
         if not os.path.exists(meta_file):
             return None
         with open(meta_file) as f:
             meta = json.load(f)
-        if meta.get("signature") != self._embedding_signature():
-            return None
-        from .operators.hnsw import HNSWIndex
-
-        return HNSWIndex.load(path)
+        return meta if meta.get("signature") == self._embedding_signature() else None
 
     def _ann_index_path(self) -> str:
         assert self.persist_dir
@@ -1120,33 +1127,21 @@ class Collection:
         calls :meth:`load_ann_index` and gets the served tier back only
         while the corpus is unmutated (``persist=False`` skips the
         write for throwaway experiments)."""
-        from .operators.ann import IVFIndex, IVFPQIndex, IVFSQIndex
+        from .operators.ann import IVF_CLASSES
 
         if kind is None:
             kind = "ivf_pq" if pq else "ivf"
-        if kind == "ivf_pq":
-            idx = IVFPQIndex.build(
-                self.df, n_clusters=n_clusters, m=m,
-                vec_col="embedding", id_col="id", seed=seed,
-            )
-        elif kind == "ivf_sq":
-            idx = IVFSQIndex.build(
-                self.df, n_clusters=n_clusters,
-                vec_col="embedding", id_col="id", seed=seed,
-            )
-        elif kind == "ivf":
-            idx = IVFIndex.build(
-                self.df, n_clusters=n_clusters,
-                vec_col="embedding", id_col="id", seed=seed,
-            )
-        else:
+        if kind not in IVF_CLASSES:
             raise ValueError(
                 f"unknown ANN index kind {kind!r}; expected "
                 "'ivf', 'ivf_sq' or 'ivf_pq' (HNSW: build_hnsw_index)"
             )
+        idx = IVF_CLASSES[kind].build(
+            self.df, n_clusters=n_clusters,
+            vec_col="embedding", id_col="id", seed=seed,
+            **({"m": m} if kind == "ivf_pq" else {}),
+        )
         if persist and self.persist_dir:
-            import json
-
             path = self._ann_index_path()
             meta_file = os.path.join(path, "_index_meta.json")
             # invalidate BEFORE rewriting the data: the parquet
@@ -1156,13 +1151,7 @@ class Collection:
             if os.path.exists(meta_file):
                 os.remove(meta_file)
             idx.save(os.path.join(path, "data"))
-            tmp = meta_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"kind": kind, "signature": self._embedding_signature()},
-                    f,
-                )
-            os.replace(tmp, meta_file)  # commit point
+            self._commit_index_meta(path, kind=kind)
         return idx
 
     def load_ann_index(self):
@@ -1172,28 +1161,16 @@ class Collection:
         as :meth:`load_hnsw_index` — a stale index must never serve
         live queries).  The returned object plugs straight into
         ``query_embedding(index=...)`` / ``query_batch(index=...)``."""
-        import json
+        meta = self._fresh_index_meta(self._ann_index_path)
+        if meta is None:
+            return None
+        from .operators.ann import IVF_CLASSES
 
-        if not self.persist_dir:
-            return None
-        path = self._ann_index_path()
-        meta_file = os.path.join(path, "_index_meta.json")
-        if not os.path.exists(meta_file):
-            return None
-        with open(meta_file) as f:
-            meta = json.load(f)
-        if meta.get("signature") != self._embedding_signature():
-            return None
-        from .operators.ann import IVFIndex, IVFPQIndex, IVFSQIndex
-
-        data = os.path.join(path, "data")
-        kind = meta.get("kind", "ivf")
-        if kind == "ivf_pq":
-            return IVFPQIndex.load(self.spark, data)
-        if kind == "ivf_sq":
-            return IVFSQIndex.load(self.spark, data)
-        return IVFIndex.load(
-            self.spark, data, vec_col="embedding", id_col="id"
+        # the quantized tiers' meta names their columns; the flat tier's
+        # bare centroid list takes them from here
+        return IVF_CLASSES[meta.get("kind", "ivf")]._load(
+            self.spark, os.path.join(self._ann_index_path(), "data"),
+            "embedding", "id",
         )
 
     def query_embedding_ann(
@@ -1225,8 +1202,12 @@ class Collection:
             # caller didn't ask to serve
             index_kwargs.setdefault("persist", False)
             index = self.build_ann_index(**index_kwargs)
-        from .operators.ann import IVFIndex, IVFPQIndex
+        from .operators.router import _filtered_tier_error, tier_of
 
+        try:
+            tier = tier_of(index)
+        except TypeError:
+            tier = "quantized"
         if where:
             from .operators.filters import where_predicate
 
@@ -1237,23 +1218,18 @@ class Collection:
             # message lives in ONE place (router._filtered_tier_error),
             # dispatched on the actual tier so an HNSW object gets the
             # graph-walk diagnosis, not the quantized one.
-            if not isinstance(index, IVFIndex):
-                from .operators.router import _filtered_tier_error, tier_of
-
-                try:
-                    tier = tier_of(index)
-                except TypeError:
-                    tier = "quantized"
+            if tier != "ivf":
                 raise ValueError(_filtered_tier_error(tier))
             return index.search_filtered(
                 list(query_embedding), int(n_results), nprobe=nprobe,
                 where=where_predicate(where),
             )
-        if isinstance(index, IVFPQIndex):
-            return index.search_batch(
-                ["0"], [list(query_embedding)], int(n_results), nprobe=nprobe
-            ).drop("query_id")
-        return index.search(list(query_embedding), int(n_results), nprobe=nprobe)
+        if tier == "ivf":
+            return index.search(list(query_embedding), int(n_results), nprobe=nprobe)
+        # both quantized tiers: one shortlist -> exact re-rank batch
+        return index.search_batch(
+            ["0"], [list(query_embedding)], int(n_results), nprobe=nprobe
+        ).drop("query_id")
 
     def query_hybrid(
         self,

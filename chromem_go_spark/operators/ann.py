@@ -1,4 +1,5 @@
-"""Approximate nearest-neighbor search: IVF (inverted-file) index.
+"""Approximate nearest-neighbor search: one IVF (inverted-file) core,
+three row formats.
 
 The reference is FLAT-only (exhaustive scan; HNSW/IVFFlat are roadmap
 items, reference README.md:176-178). At 100 TB, brute force over every
@@ -13,12 +14,26 @@ Spark's storage model:
 - **search**: rank centroids against the query on the driver (tiny), pick
   ``nprobe``, scan only those partitions, brute-force within.
 
+Three tiers share one core — the coarse quantizer, the
+``(__batch, cluster_id)``-partitioned tables and meta file, save/load,
+replay-idempotent appends, tombstone deletes, compaction — and differ
+only in what a row stores: :class:`IVFIndex` the full vectors (plus
+every input column), :class:`IVFSQIndex` one uint8 per dimension (SQ8
+codec), :class:`IVFPQIndex` ``m`` uint8 subspace codes (PQ codec).  A
+codec supplies its fit, one encode function (build and append both call
+it) and its approximate score; both quantized tiers share the Arrow
+code-matrix unpack and the shortlist -> exact re-rank join.
+``IVF_CLASSES`` maps each tier name to its class.
+
 With ``nprobe == n_clusters`` the search is exact (identical results to
 FLAT), which is how the DuckDB oracle validates it.
 """
 
 from __future__ import annotations
 
+import json
+import os
+from itertools import repeat
 from typing import Sequence
 
 import numpy as np
@@ -177,758 +192,191 @@ def _kmeans_l2(sample: np.ndarray, k: int, seed: int = 42, n_iter: int = 15) -> 
     return cents
 
 
-def _pq_encode(
-    assigned: DataFrame, codebooks: np.ndarray, vec_col: str, id_col: str
-) -> DataFrame:
-    """Encode cluster-assigned vectors to m uint8 PQ codes per row —
-    one argmin per subspace per Arrow batch (shared by index build and
-    incremental append, which must quantize identically)."""
-    mm, _, s = codebooks.shape
-    cb = codebooks
+def _unit(v) -> np.ndarray:
+    """``v`` as a float64 vector scaled to unit length (zero stays zero)."""
+    q = np.asarray(v, dtype=np.float64)
+    nrm = np.linalg.norm(q)
+    return q / nrm if nrm > 0 else q
 
-    def encode(batches):
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = mat.shape[0]
-            codes = np.empty((n, mm), dtype=np.uint8)
-            for j in range(mm):
-                sub = mat[:, j * s : (j + 1) * s]
-                d2 = -2.0 * sub @ cb[j].T + (cb[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cluster_id": pdf["cluster_id"],
-                    "codes": [c.tobytes() for c in codes],
-                }
-            )
+def _code_matrix(col, n: int, width: int, tier: str) -> np.ndarray:
+    """The ``(n, width)`` uint8 code matrix of an Arrow binary column.
 
-    id_type = assigned.schema[id_col].dataType.simpleString()
-    return assigned.mapInPandas(
-        encode, f"{id_col} {id_type}, cluster_id int, codes binary"
+    Zero-copy: a no-null Arrow binary array stores all values
+    contiguously in one data buffer; when every entry is exactly
+    ``width`` bytes the matrix is just a reshape of that buffer — no
+    per-row Python objects, no copy."""
+    import pyarrow as pa
+
+    off_dt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    bufs = col.buffers()
+    offs = np.frombuffer(bufs[1], dtype=off_dt)[col.offset : col.offset + n + 1]
+    if col.null_count == 0 and np.all(np.diff(offs) == width):
+        data = np.frombuffer(bufs[2], dtype=np.uint8)
+        return data[offs[0] : offs[-1]].reshape(n, width)
+    vals = col.to_pylist()  # ragged rows — correctness fallback
+    if any(v is None for v in vals):
+        raise ValueError(f"NULL code row in {tier} codes table (corrupt index)")
+    return np.frombuffer(b"".join(vals), dtype=np.uint8).reshape(n, width)
+
+
+def _write_batch(frame: DataFrame, batch_id: int, mode: str, parts, path: str) -> None:
+    """Write ``frame`` as partition ``__batch=<batch_id>`` of the table
+    at ``path``, partitioned by ``parts``."""
+    (
+        frame.withColumn("__batch", F.lit(int(batch_id)))
+        .write.mode(mode)
+        .partitionBy(*parts)
+        .parquet(path)
     )
 
 
-class IVFPQIndex:
-    """IVF + Product Quantization (Jegou, Douze, Schmid: "Product
-    Quantization for Nearest Neighbor Search", TPAMI 2011 — public
-    method). The 100 TB memory story:
+class _IVFCore:
+    """The coarse quantizer and on-disk lifecycle shared by the three
+    IVF tiers.  A tier names its meta file (``_META``), its tables
+    (``_TABLES``: attribute, sub-directory, partition columns) and the
+    quantizer arrays its meta carries (``_QUANT``); build, save/load,
+    append, delete, compact and probing are all here."""
 
-    - each vector is stored as ``m`` uint8 codes (one per subspace)
-      in a BINARY column instead of dim float32s — 256-dim vectors
-      compress 1024 bytes -> 16 bytes (m=16), so the scan that feeds
-      candidate generation reads ~64x less data;
-    - search is ADC (asymmetric distance computation): per query, an
-      (m x n_codes) lookup table of subspace dot products is built
-      once on the driver; candidate scores are table-lookups + sums
-      over the codes — one NumPy gather per Arrow batch, no vector
-      math on the corpus;
-    - the top ``rerank`` candidates per query are then re-ranked
-      EXACTLY by joining the original vectors back by id — so
-      precision loss is bounded by candidate recall, not code
-      resolution, and with generous rerank the result equals FLAT
-      (which is how the DuckDB oracle validates it).
+    tier: str
+    _QUANT: tuple = ()
+    _BASE_BATCH = -1  # reserved __batch id: initial build / compacted history
 
-    Coarse routing reuses the IVF layout: codes live alongside
-    cluster_id, so probing remains partition pruning.
-    """
-
-    def __init__(
-        self,
-        centroids: np.ndarray,
-        codebooks: np.ndarray,
-        coded: DataFrame,
-        vectors: DataFrame,
-        vec_col: str,
-        id_col: str,
-    ):
-        self.centroids = centroids  # (n_clusters, dim) coarse
-        self.codebooks = codebooks  # (m, n_codes, sub_dim)
-        self.coded = coded  # id, cluster_id, codes binary
-        self.vectors = vectors  # id -> original vector (re-rank source)
-        self.vec_col = vec_col
-        self.id_col = id_col
+    @staticmethod
+    def _fit(sample: np.ndarray, seed: int) -> tuple:
+        """The codec's quantizer arrays, in ``_QUANT`` order."""
+        return ()
 
     @classmethod
-    def build(
-        cls,
-        df: DataFrame,
-        n_clusters: int = 16,
-        m: int = 16,
-        n_codes: int = 256,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-        seed: int = 42,
-        sample_size: int = 50_000,
-    ) -> "IVFPQIndex":
+    def _frames(cls, assigned, rows, quant, vec_col, id_col) -> list:
+        """The tier's tables (``_TABLES`` order) for cluster-assigned
+        rows; ``rows`` is the same input as bare (id, vector)."""
+        return [assigned]
+
+    @classmethod
+    def _build(cls, df, n_clusters, vec_col, id_col, seed, sample_size, **params):
         # ONE hash-spread sample feeds the coarse quantizer AND the
-        # subspace codebooks (previously each did its own count+collect
-        # — two redundant full-table jobs per index build)
+        # codec fit (one sample per trainer would be redundant
+        # full-table jobs per index build)
         sample = _hash_sample(df, vec_col, id_col, sample_size)
-        base = IVFIndex.build(
-            df, n_clusters, vec_col, id_col, seed, sample_size, _sample=sample
-        )
-        dim = sample.shape[1]
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        s = dim // m
-        # r15: the codebook fit is bounded by a deterministic even
-        # stride over the (already hash-spread) sample — 100x the
-        # default code count is ample for 256-cell subspace k-means,
-        # and the fit cost stops scaling with sample_size.  Below the
-        # cap (every test SF; sf0.1 samples 2,000 rows) the matrix is
-        # untouched, so codebooks — and the value-checked ivf_pq_search
-        # results — are bit-identical.
-        fit = sample
-        if fit.shape[0] > _PQ_FIT_CAP:
-            idx = np.linspace(0, fit.shape[0] - 1, _PQ_FIT_CAP).astype(np.int64)
-            fit = fit[idx]
-        codebooks = np.stack(
-            [
-                _kmeans_l2(fit[:, j * s : (j + 1) * s], n_codes, seed + j)
-                for j in range(m)
-            ]
-        )  # (m, k_j<=n_codes, s) — all k_j equal since same sample size
-
-        coded = _pq_encode(base.assigned, codebooks, vec_col, id_col)
-        vectors = df.select(id_col, vec_col)
-        return cls(base.centroids, codebooks, coded, vectors, vec_col, id_col)
-
-    _BASE_BATCH = -1  # reserved __batch id: initial build / compacted history
-
-    def save(self, path: str) -> None:
-        """Persist: codes partitioned by (__batch, cluster_id) (probe =
-        partition pruning over a 16-byte-per-row table; the __batch
-        level makes the saved index appendable — :meth:`append_batch`),
-        original vectors alongside for the re-rank join,
-        centroids+codebooks as JSON."""
-        import json
-        import os
-
-        (
-            self.coded.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(os.path.join(path, "codes"))
-        )
-        (
-            self.vectors.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .parquet(os.path.join(path, "vectors"))
-        )
-        with open(os.path.join(path, "_pq_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "centroids": self.centroids.tolist(),
-                    "codebooks": self.codebooks.tolist(),
-                    "vec_col": self.vec_col,
-                    "id_col": self.id_col,
-                },
-                f,
-            )
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "IVFPQIndex":
-        import json
-        import os
-
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            meta = json.load(f)
-
-        tombs = load_tombstones(spark, path, meta["id_col"])
-
-        def rd(sub: str) -> DataFrame:
-            # manifest-aware: filters uncommitted/obsolete fold dirs,
-            # then anti-joins tombstoned ids (logical deletes)
-            df = read_live(spark, os.path.join(path, sub))
-            if "__batch" in df.columns:
-                df = df.drop("__batch")
-            return apply_tombstones(df, tombs, meta["id_col"])
-
-        return cls(
-            np.asarray(meta["centroids"], dtype=np.float64),
-            np.asarray(meta["codebooks"], dtype=np.float64),
-            rd("codes"),
-            rd("vectors"),
-            meta["vec_col"],
-            meta["id_col"],
-        )
-
-    @classmethod
-    def append_batch(
-        cls, batch_df: DataFrame, path: str, batch_id: int
-    ) -> None:
-        """Incremental PQ maintenance: quantize one micro-batch of new
-        vectors with the SAVED index's frozen centroids/codebooks and
-        add it as partition ``__batch=<batch_id>`` of both the codes
-        and vectors tables — O(batch), replay-idempotent (the batch's
-        own partitions are dropped before the write).  Frozen-codebook
-        drift has the same recall caveat and rebuild cadence as
-        ``IVFIndex.append_batch``."""
-        import json
-        import os
-
-        spark = batch_df.sparkSession
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            meta = json.load(f)
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        cbs = np.asarray(meta["codebooks"], dtype=np.float64)
-        vec_col, id_col = meta["vec_col"], meta["id_col"]
-        assigned = _assign_clusters(
-            batch_df.select(id_col, vec_col), cents, vec_col
-        )
-        coded = _pq_encode(assigned, cbs, vec_col, id_col)
-        codes_path = os.path.join(path, "codes")
-        vecs_path = os.path.join(path, "vectors")
-        drop_batch_partition(spark, codes_path, batch_id)
-        drop_batch_partition(spark, vecs_path, batch_id)
-        (
-            coded.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(codes_path)
-        )
-        (
-            batch_df.select(id_col, vec_col)
-            .withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch")
-            .parquet(vecs_path)
-        )
-
-    @classmethod
-    def delete_ids(cls, spark: SparkSession, path: str, ids: Sequence) -> None:
-        """Logical delete by id (tombstone at the INDEX root, shared by
-        the codes and vectors tables): O(ids); ``load`` anti-joins,
-        ``compact`` applies physically to both tables."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
-        append_tombstones(spark, path, ids, id_col)
-
-    @classmethod
-    def compact(
-        cls, spark: SparkSession, path: str, commit_mode: str = "rename"
-    ) -> None:
-        """Fold appended micro-batch partitions into the base (codes and
-        vectors both) and physically apply tombstoned deletes; run
-        between ingest sessions.  ``commit_mode="manifest"`` for object
-        stores (see batchstate.py).  Tombstones are cleared only after
-        BOTH tables folded (a crash between re-applies them — no-op)."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
-        tombs = load_tombstones(spark, path, id_col)
-        xf = None if tombs is None else (
-            lambda df: apply_tombstones(df, tombs, id_col)
-        )
-        folded_codes = fold_batch_partitions(
-            spark,
-            os.path.join(path, "codes"),
-            ["__batch", "cluster_id"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        folded_vecs = fold_batch_partitions(
-            spark,
-            os.path.join(path, "vectors"),
-            ["__batch"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        if tombs is not None and folded_codes and folded_vecs:
-            clear_tombstones(spark, path)
-
-    def probe_clusters(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
-        q = np.asarray(query_vec, dtype=np.float64)
-        nrm = np.linalg.norm(q)
-        if nrm > 0:
-            q = q / nrm
-        sims = self.centroids @ q
-        return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
-
-    def search_batch(
-        self,
-        query_ids: Sequence,
-        query_vecs: Sequence[Sequence[float]],
-        k: int,
-        nprobe: int = 4,
-        rerank: int = 128,
-    ) -> DataFrame:
-        """ADC candidate generation over the code column, then exact
-        re-rank of the top ``rerank`` per query.
-
-        Shuffle profile: the candidate shuffle carries at most
-        (partitions x queries x rerank) tiny rows; the re-rank join
-        touches only (queries x rerank) vectors by id. The corpus-wide
-        scan reads (id, cluster_id, 16-byte codes) — never the vectors.
-        """
-        qmat = np.asarray(query_vecs, dtype=np.float64)
-        norms = np.linalg.norm(qmat, axis=1, keepdims=True)
+        norms = np.linalg.norm(sample, axis=1, keepdims=True)
         norms[norms == 0] = 1.0
-        qmat = qmat / norms
-        nq, dim = qmat.shape
-        mcount, ncodes, s = self.codebooks.shape
-        # per-query LUT: luts[q, j, c] = <q_sub_j, codebook_j[c]>
-        luts = np.einsum(
-            "qjs,jcs->qjc", qmat.reshape(nq, mcount, s), self.codebooks
-        )  # (nq, m, n_codes)
-        qid_strs = [str(q) for q in query_ids]
-        probes = set()
-        for row in qmat:
-            probes.update(self.probe_clusters(row, nprobe))
-        probes = sorted(probes)
-        rr = int(rerank)
-        id_col = self.id_col
-        id_type = self.coded.schema[id_col].dataType.simpleString()
-        out_schema = f"query_id string, {id_col} {id_type}, approx double"
-
-        def adc(batches):
-            import pyarrow as pa
-
-            for rb in batches:
-                n = rb.num_rows
-                if n == 0:
-                    continue
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                col = rb.column(1)
-                # Zero-copy view of the code matrix: a no-null Arrow
-                # binary array stores all values contiguously in one
-                # data buffer; when every entry is exactly mcount bytes
-                # the (n, m) matrix is just a reshape of that buffer —
-                # no per-row Python objects, no copy.
-                off_dt = (
-                    np.int64 if pa.types.is_large_binary(col.type) else np.int32
-                )
-                bufs = col.buffers()
-                offs = np.frombuffer(bufs[1], dtype=off_dt)[
-                    col.offset : col.offset + n + 1
-                ]
-                if col.null_count == 0 and np.all(np.diff(offs) == mcount):
-                    data = np.frombuffer(bufs[2], dtype=np.uint8)
-                    codes = data[offs[0] : offs[-1]].reshape(n, mcount)
-                else:  # ragged rows — correctness fallback
-                    vals = col.to_pylist()
-                    if any(v is None for v in vals):
-                        raise ValueError(
-                            "NULL code row in PQ codes table (corrupt index)"
-                        )
-                    blob = b"".join(vals)
-                    codes = np.frombuffer(blob, dtype=np.uint8).reshape(
-                        n, mcount
-                    )
-                # scores[q, i] = sum_j luts[q, j, codes[i, j]]
-                scores = np.zeros((nq, n))
-                for j in range(mcount):
-                    scores += luts[:, j, codes[:, j]]
-                take = min(rr, n)
-                if take < n:
-                    part = np.argpartition(-scores, take - 1, axis=1)[:, :take]
-                else:
-                    part = np.tile(np.arange(n), (nq, 1))
-                out_q = np.repeat(np.arange(nq), part.shape[1])
-                rows = part.ravel()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([qid_strs[i] for i in out_q], type=pa.string()),
-                        pa.array(ids[rows]),
-                        pa.array(scores[out_q, rows], type=pa.float64()),
-                    ],
-                    names=["query_id", id_col, "approx"],
-                )
-
-        cand = (
-            self.coded.filter(F.col("cluster_id").isin(probes))
-            .select(id_col, "codes")
-            .mapInArrow(adc, schema=out_schema)
+        cents = _kmeans(sample / norms, n_clusters, seed)
+        quant = cls._fit(sample, seed, **params)
+        frames = cls._frames(
+            _assign_clusters(df, cents, vec_col), df.select(id_col, vec_col),
+            quant, vec_col, id_col,
         )
-        shortlist = knn_ops.topk_per_query(
-            cand, rr, "query_id", id_col, "approx"
-        )
-        # exact re-rank: join original vectors by id (rerank rows per query)
-        qdf_rows = [
-            (qid_strs[i], [float(x) for x in qmat[i]]) for i in range(nq)
+        return cls(cents, *quant, *frames, vec_col, id_col)
+
+    @classmethod
+    def _paths(cls, path: str) -> list:
+        return [
+            (attr, os.path.join(path, sub) if sub else path, parts)
+            for attr, sub, parts in cls._TABLES
         ]
-        qdf = self.coded.sparkSession.createDataFrame(
-            qdf_rows, "query_id string, query_vec array<double>"
-        )
-        exact = (
-            shortlist.join(self.vectors, id_col)
-            .join(F.broadcast(qdf), "query_id")
-            .withColumn(
-                "similarity",
-                V.dot(F.col(self.vec_col).cast("array<double>"), F.col("query_vec")),
-            )
-            .select("query_id", id_col, "similarity")
-        )
-        return knn_ops.topk_per_query(exact, int(k), "query_id", id_col)
 
-
-class IVFSQIndex:
-    """IVF + 8-bit scalar quantization — the middle compression tier
-    between FLAT (4 bytes/dim) and PQ (sub-byte/dim): one uint8 per
-    dimension (4x smaller scans), per-dimension (min, step) learned
-    from the training sample (public method — the SQ8 storage every
-    production vector store ships).
-
-    Approximate scoring is exact-in-the-quantized-domain:
-    ``dot(q, dequant(code)) = dot(q, mins) + (codes @ (q*steps))`` —
-    one uint8 GEMM per Arrow batch, no per-row work.  The top
-    ``rerank`` candidates re-rank EXACTLY by id join, so with generous
-    rerank the result equals FLAT (the oracle's check, same contract
-    as IVF-PQ).  Coarse routing reuses the IVF layout: codes live
-    alongside cluster_id, probing is partition pruning."""
-
-    def __init__(
-        self,
-        centroids: np.ndarray,
-        mins: np.ndarray,
-        steps: np.ndarray,
-        coded: DataFrame,
-        vectors: DataFrame,
-        vec_col: str,
-        id_col: str,
-    ):
-        self.centroids = centroids
-        self.mins = mins    # (dim,)
-        self.steps = steps  # (dim,) — 0-range dims pinned to step 1
-        self.coded = coded  # id, cluster_id, codes binary(dim)
-        self.vectors = vectors
-        self.vec_col = vec_col
-        self.id_col = id_col
-
-    @classmethod
-    def build(
-        cls,
-        df: DataFrame,
-        n_clusters: int = 16,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-        seed: int = 42,
-        sample_size: int = 50_000,
-    ) -> "IVFSQIndex":
-        sample = _hash_sample(df, vec_col, id_col, sample_size)
-        base = IVFIndex.build(
-            df, n_clusters, vec_col, id_col, seed, sample_size, _sample=sample
-        )
-        mins = sample.min(axis=0)
-        rng = sample.max(axis=0) - mins
-        steps = np.where(rng > 0, rng / 255.0, 1.0)
-
-        import pandas as pd
-
-        id_type = df.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, cluster_id int, codes binary"
-        m, s = mins.copy(), steps.copy()
-
-        def encode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                codes = np.clip(
-                    np.rint((mat - m) / s), 0, 255
-                ).astype(np.uint8)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cluster_id": pdf["cluster_id"],
-                        "codes": [c.tobytes() for c in codes],
-                    }
-                )
-
-        coded = base.assigned.select(id_col, "cluster_id", vec_col).mapInPandas(
-            encode, out_schema
-        )
-        return cls(
-            base.centroids, mins, steps, coded,
-            df.select(id_col, vec_col), vec_col, id_col,
-        )
-
-    _BASE_BATCH = -1  # reserved __batch id: initial build / compacted history
+    def _meta(self):
+        return {
+            "centroids": self.centroids.tolist(),
+            **{a: getattr(self, a).tolist() for a in self._QUANT},
+            "vec_col": self.vec_col,
+            "id_col": self.id_col,
+        }
 
     def save(self, path: str) -> None:
-        """Persist with the same layout contract as the PQ tier: codes
-        partitioned by (__batch, cluster_id) — probe == partition
-        pruning over a 1-byte-per-dim table — vectors alongside for the
-        re-rank join, quantizer (centroids + mins/steps) as JSON."""
-        import json
-        import os
-
-        (
-            self.coded.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(os.path.join(path, "codes"))
-        )
-        (
-            self.vectors.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .parquet(os.path.join(path, "vectors"))
-        )
-        with open(os.path.join(path, "_sq_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "centroids": self.centroids.tolist(),
-                    "mins": self.mins.tolist(),
-                    "steps": self.steps.tolist(),
-                    "vec_col": self.vec_col,
-                    "id_col": self.id_col,
-                },
-                f,
-            )
+        """Persist every table partitioned by ``__batch`` (plus
+        ``cluster_id`` where rows carry it: probing == partition
+        pruning) as the ``__batch=-1`` base — the ``__batch`` level
+        makes the saved index APPENDABLE (streaming ingest adds
+        micro-batch partitions beside the base, :meth:`append_batch`)
+        — then the quantizer as JSON under the tier's meta name."""
+        for attr, p, parts in self._paths(path):
+            _write_batch(getattr(self, attr), self._BASE_BATCH, "overwrite", parts, p)
+        with open(os.path.join(path, self._META), "w") as f:
+            json.dump(self._meta(), f)
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "IVFSQIndex":
-        import json
-        import os
-
-        with open(os.path.join(path, "_sq_meta.json")) as f:
+    def _read_meta(cls, path: str, vec_col=None, id_col=None) -> dict:
+        with open(os.path.join(path, cls._META)) as f:
             meta = json.load(f)
-        tombs = load_tombstones(spark, path, meta["id_col"])
+        if isinstance(meta, list):
+            # flat IVF's _centroids.json is the bare centroid list; the
+            # caller names the columns
+            meta = {"centroids": meta, "vec_col": vec_col, "id_col": id_col}
+        return meta
 
-        def rd(sub: str) -> DataFrame:
-            df = read_live(spark, os.path.join(path, sub))
+    @classmethod
+    def _arrays(cls, meta: dict) -> list:
+        return [
+            np.asarray(meta[a], dtype=np.float64)
+            for a in ("centroids", *cls._QUANT)
+        ]
+
+    @classmethod
+    def _load(cls, spark: SparkSession, path: str, vec_col=None, id_col=None):
+        meta = cls._read_meta(path, vec_col, id_col)
+        id_col = meta["id_col"]
+        tombs = load_tombstones(spark, path, id_col)
+        tables = []
+        for _attr, p, _parts in cls._paths(path):
+            # manifest-aware: filters uncommitted/obsolete fold dirs,
+            # then anti-joins tombstoned ids (logical deletes, applied
+            # physically by the next compact)
+            df = read_live(spark, p)
             if "__batch" in df.columns:
                 df = df.drop("__batch")
-            return apply_tombstones(df, tombs, meta["id_col"])
-
-        return cls(
-            np.asarray(meta["centroids"], dtype=np.float64),
-            np.asarray(meta["mins"], dtype=np.float64),
-            np.asarray(meta["steps"], dtype=np.float64),
-            rd("codes"),
-            rd("vectors"),
-            meta["vec_col"],
-            meta["id_col"],
-        )
+            tables.append(apply_tombstones(df, tombs, id_col))
+        return cls(*cls._arrays(meta), *tables, meta["vec_col"], id_col)
 
     @classmethod
-    def delete_ids(cls, spark: SparkSession, path: str, ids: Sequence) -> None:
-        """Logical delete by id — the shared tombstone protocol
-        (tombstones at the index root; ``load`` anti-joins them)."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_sq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
-        append_tombstones(spark, path, ids, id_col)
-
-    @classmethod
-    def append_batch(cls, batch_df: DataFrame, path: str, batch_id: int) -> None:
-        """Incremental SQ maintenance: assign + encode one micro-batch
-        with the SAVED index's frozen centroids and (mins, steps), add
-        it as partition ``__batch=<batch_id>`` of codes and vectors —
-        O(batch), replay-idempotent (the batch's own partitions are
-        dropped first).  Same frozen-quantizer drift caveat and rebuild
-        cadence as the IVF/PQ append paths."""
-        import json
-        import os
-
-        import pandas as pd
-
-        spark = batch_df.sparkSession
-        with open(os.path.join(path, "_sq_meta.json")) as f:
-            meta = json.load(f)
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        mins = np.asarray(meta["mins"], dtype=np.float64)
-        steps = np.asarray(meta["steps"], dtype=np.float64)
+    def _append(cls, batch_df: DataFrame, path: str, batch_id: int, vec_col=None, id_col=None):
+        meta = cls._read_meta(path, vec_col, id_col)
         vec_col, id_col = meta["vec_col"], meta["id_col"]
-        assigned = _assign_clusters(
-            batch_df.select(id_col, vec_col), cents, vec_col
+        cents, *quant = cls._arrays(meta)
+        rows = batch_df.select(id_col, vec_col)
+        frames = cls._frames(
+            _assign_clusters(rows, cents, vec_col), rows, quant, vec_col, id_col
         )
-        id_type = batch_df.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, cluster_id int, codes binary"
-
-        def encode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                codes = np.clip(np.rint((mat - mins) / steps), 0, 255).astype(
-                    np.uint8
-                )
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cluster_id": pdf["cluster_id"],
-                        "codes": [c.tobytes() for c in codes],
-                    }
-                )
-
-        coded = assigned.select(id_col, "cluster_id", vec_col).mapInPandas(
-            encode, out_schema
-        )
-        codes_path = os.path.join(path, "codes")
-        vecs_path = os.path.join(path, "vectors")
-        drop_batch_partition(spark, codes_path, batch_id)
-        drop_batch_partition(spark, vecs_path, batch_id)
-        (
-            coded.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(codes_path)
-        )
-        (
-            batch_df.select(id_col, vec_col)
-            .withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch")
-            .parquet(vecs_path)
-        )
+        spark = batch_df.sparkSession
+        paths = cls._paths(path)
+        for _attr, p, _parts in paths:
+            drop_batch_partition(spark, p, batch_id)  # replay: replace
+        for frame, (_attr, p, parts) in zip(frames, paths):
+            _write_batch(frame, batch_id, "append", parts, p)
 
     @classmethod
-    def compact(
-        cls, spark: SparkSession, path: str, commit_mode: str = "rename"
-    ) -> None:
-        """Fold appended micro-batches into the base (codes + vectors)
-        and apply tombstones physically — identical protocol to the
-        IVF/PQ compacts; tombstones clear only after BOTH folds."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_sq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
+    def _compact(cls, spark: SparkSession, path: str, commit_mode: str, id_col: str) -> None:
         tombs = load_tombstones(spark, path, id_col)
-        xf = None if tombs is None else (
-            lambda df: apply_tombstones(df, tombs, id_col)
-        )
-        folded_codes = fold_batch_partitions(
-            spark,
-            os.path.join(path, "codes"),
-            ["__batch", "cluster_id"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        folded_vecs = fold_batch_partitions(
-            spark,
-            os.path.join(path, "vectors"),
-            ["__batch"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        if tombs is not None and folded_codes and folded_vecs:
+        xf = None if tombs is None else (lambda df: apply_tombstones(df, tombs, id_col))
+        # with tombstones pending, fold even if no history dirs wait
+        # (the base alone must rewrite to apply them physically)
+        folded = [
+            fold_batch_partitions(
+                spark, p, list(parts), cls._BASE_BATCH,
+                commit_mode=commit_mode, transform=xf, force=tombs is not None,
+            )
+            for _attr, p, parts in cls._paths(path)
+        ]
+        if tombs is not None and all(folded):
+            # cleared ONLY after every table's fold committed — a crash
+            # before this re-applies the tombstones next time (idempotent)
             clear_tombstones(spark, path)
 
     def probe_clusters(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
-        q = np.asarray(query_vec, dtype=np.float64)
-        nrm = np.linalg.norm(q)
-        if nrm > 0:
-            q = q / nrm
-        sims = self.centroids @ q
+        sims = self.centroids @ _unit(query_vec)
         return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
 
-    def search_batch(
-        self,
-        query_ids: Sequence,
-        query_vecs: Sequence[Sequence[float]],
-        k: int,
-        nprobe: int = 4,
-        rerank: int = 128,
-    ) -> DataFrame:
-        """SQ8 candidate generation (one uint8 GEMM per Arrow batch over
-        the partition-pruned code scan) + exact re-rank by id join."""
-        import pyarrow as pa
 
-        qmat = np.asarray(query_vecs, dtype=np.float64)
-        norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        qmat = qmat / norms
-        nq, dim = qmat.shape
-        qs = qmat * self.steps        # (nq, dim)
-        consts = qmat @ self.mins     # (nq,)
-        qid_strs = [str(q) for q in query_ids]
-        probes = sorted(
-            {c for row in qmat for c in self.probe_clusters(row, nprobe)}
-        )
-        rr = int(rerank)
-        id_col = self.id_col
-        id_type = self.coded.schema[id_col].dataType.simpleString()
-        out_schema = f"query_id string, {id_col} {id_type}, approx double"
+class IVFIndex(_IVFCore):
+    """IVF over full vectors: every input column rides in the
+    cluster-partitioned table, so probed rows score exactly and
+    metadata predicates run below scoring."""
 
-        def sq_scan(batches):
-            for rb in batches:
-                n = rb.num_rows
-                if n == 0:
-                    continue
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                col = rb.column(1)
-                off_dt = (
-                    np.int64 if pa.types.is_large_binary(col.type) else np.int32
-                )
-                bufs = col.buffers()
-                offs = np.frombuffer(bufs[1], dtype=off_dt)[
-                    col.offset : col.offset + n + 1
-                ]
-                if col.null_count == 0 and np.all(np.diff(offs) == dim):
-                    data = np.frombuffer(bufs[2], dtype=np.uint8)
-                    codes = data[offs[0] : offs[-1]].reshape(n, dim)
-                else:  # ragged rows — correctness fallback
-                    vals = col.to_pylist()
-                    if any(v is None for v in vals):
-                        raise ValueError(
-                            "NULL code row in SQ codes table (corrupt index)"
-                        )
-                    blob = b"".join(vals)
-                    codes = np.frombuffer(blob, dtype=np.uint8).reshape(n, dim)
-                scores = codes @ qs.T + consts  # (n, nq)
-                take = min(rr, n)
-                if take < n:
-                    part = np.argpartition(-scores, take - 1, axis=0)[:take].T
-                else:
-                    part = np.tile(np.arange(n), (nq, 1))
-                out_q = np.repeat(np.arange(nq), part.shape[1])
-                rows = part.ravel()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([qid_strs[i] for i in out_q], type=pa.string()),
-                        pa.array(ids[rows]),
-                        pa.array(scores[rows, out_q], type=pa.float64()),
-                    ],
-                    names=["query_id", id_col, "approx"],
-                )
+    tier = "ivf"
+    _META = "_centroids.json"
+    _TABLES = (("assigned", "", ("__batch", "cluster_id")),)
 
-        cand = (
-            self.coded.filter(F.col("cluster_id").isin(probes))
-            .select(id_col, "codes")
-            .mapInArrow(sq_scan, schema=out_schema)
-        )
-        shortlist = knn_ops.topk_per_query(cand, rr, "query_id", id_col, "approx")
-        qdf = self.coded.sparkSession.createDataFrame(
-            [(qid_strs[i], [float(x) for x in qmat[i]]) for i in range(nq)],
-            "query_id string, query_vec array<double>",
-        )
-        exact = (
-            shortlist.join(self.vectors, id_col)
-            .join(F.broadcast(qdf), "query_id")
-            .withColumn(
-                "similarity",
-                V.dot(F.col(self.vec_col).cast("array<double>"), F.col("query_vec")),
-            )
-            .select("query_id", id_col, "similarity")
-        )
-        return knn_ops.topk_per_query(exact, int(k), "query_id", id_col)
-
-
-class IVFIndex:
     def __init__(self, centroids: np.ndarray, assigned: DataFrame, vec_col: str, id_col: str):
         self.centroids = centroids
         self.assigned = assigned  # has cluster_id column
@@ -944,54 +392,15 @@ class IVFIndex:
         id_col: str = "vec_id",
         seed: int = 42,
         sample_size: int = 50_000,
-        _sample: np.ndarray | None = None,
     ) -> "IVFIndex":
-        # hash-spread sample (see _hash_sample); ``_sample`` lets
-        # IVFPQIndex.build share one sample between the coarse quantizer
-        # and the codebook trainers
-        sample = (
-            _sample
-            if _sample is not None
-            else _hash_sample(df, vec_col, id_col, sample_size)
-        )
-        norms = np.linalg.norm(sample, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        cents = _kmeans(sample / norms, n_clusters, seed)
-        assigned = _assign_clusters(df, cents, vec_col)
-        return cls(cents, assigned, vec_col, id_col)
+        return cls._build(df, n_clusters, vec_col, id_col, seed, sample_size)
 
-    _BASE_BATCH = -1  # reserved __batch id for the initial build / compacted history
-
-    def save(self, path: str) -> None:
-        """Persist partitioned by (__batch, cluster_id): probing ==
-        partition pruning on cluster_id; the ``__batch`` level makes the
-        saved index APPENDABLE — streaming ingest adds micro-batch
-        partitions next to the ``__batch=-1`` base (see
-        :meth:`append_batch`)."""
-        (
-            self.assigned.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(path)
-        )
-        import json, os
-
-        with open(os.path.join(path, "_centroids.json"), "w") as f:
-            json.dump(self.centroids.tolist(), f)
+    def _meta(self):
+        return self.centroids.tolist()
 
     @classmethod
     def load(cls, spark: SparkSession, path: str, vec_col: str = "embedding", id_col: str = "vec_id") -> "IVFIndex":
-        import json, os
-
-        with open(os.path.join(path, "_centroids.json")) as f:
-            cents = np.asarray(json.load(f), dtype=np.float64)
-        df = read_live(spark, path)  # manifest-aware fold-dir filtering
-        if "__batch" in df.columns:
-            df = df.drop("__batch")
-        # logical deletes: anti-join tombstoned ids (physically applied
-        # by the next compact)
-        df = apply_tombstones(df, load_tombstones(spark, path, id_col), id_col)
-        return cls(cents, df, vec_col, id_col)
+        return cls._load(spark, path, vec_col, id_col)
 
     @classmethod
     def append_batch(
@@ -1020,21 +429,7 @@ class IVFIndex:
         serving systems run IVF: static coarse quantizer, growing
         posting lists, periodic retrain.
         """
-        import json, os
-
-        spark = batch_df.sparkSession
-        with open(os.path.join(path, "_centroids.json")) as f:
-            cents = np.asarray(json.load(f), dtype=np.float64)
-        assigned = _assign_clusters(
-            batch_df.select(id_col, vec_col), cents, vec_col
-        )
-        drop_batch_partition(spark, path, batch_id)  # replay: replace
-        (
-            assigned.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(path)
-        )
+        cls._append(batch_df, path, batch_id, vec_col, id_col)
 
     @classmethod
     def delete_ids(
@@ -1061,41 +456,12 @@ class IVFIndex:
         Run between ingest sessions — not concurrently with an active
         append.  ``commit_mode="manifest"`` for object stores (see
         batchstate.py)."""
-        tombs = load_tombstones(spark, path, id_col)
-        folded = fold_batch_partitions(
-            spark,
-            path,
-            ["__batch", "cluster_id"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=(
-                None if tombs is None else (lambda df: apply_tombstones(df, tombs, id_col))
-            ),
-            # with tombstones pending, fold even if no history dirs wait
-            # (the base alone must rewrite to apply them physically)
-            force=tombs is not None,
-        )
-        if tombs is not None and folded:
-            # cleared ONLY after the fold committed — a crash before
-            # this re-applies the tombstones next time (idempotent)
-            clear_tombstones(spark, path)
-
-    def probe_clusters(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
-        q = np.asarray(query_vec, dtype=np.float64)
-        nrm = np.linalg.norm(q)
-        if nrm > 0:
-            q = q / nrm
-        sims = self.centroids @ q
-        return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
+        cls._compact(spark, path, commit_mode, id_col)
 
     def search(self, query_vec: Sequence[float], k: int, nprobe: int = 4) -> DataFrame:
         """Filter to probed clusters (partition-prunable) then exact top-k
         within them."""
-        probes = self.probe_clusters(query_vec, nprobe)
-        cand = self.assigned.filter(F.col("cluster_id").isin(probes))
-        return knn_ops.knn_single(
-            cand, list(query_vec), k, vec_col=self.vec_col, id_col=self.id_col
-        ).drop("cluster_id")
+        return self.search_filtered(query_vec, k, nprobe)
 
     def search_filtered(
         self,
@@ -1163,24 +529,15 @@ class IVFIndex:
         both broadcast hash joins pipeline in one codegen stage, so
         the denormalized q × nprobe × dim form never exists."""
         spark = self.assigned.sparkSession
-        pair_rows = []
-        meta_rows = []
-        for qid, qv in zip(query_ids, query_vecs):
-            q = np.asarray(qv, dtype=np.float64)
-            nrm = np.linalg.norm(q)
-            if nrm > 0:
-                q = q / nrm
-            meta_rows.append((str(qid), [float(x) for x in q]))
-            for c in self.probe_clusters(q, nprobe):
-                pair_rows.append((str(qid), int(c)))
+        pair_rows, meta_rows = self._probe_tables(
+            [str(q) for q in query_ids], query_vecs, repeat(((), (), ())), nprobe
+        )
         pairs_df = spark.createDataFrame(
             pair_rows, "query_id string, cluster_id int"
         )
-        qmeta_df = spark.createDataFrame(
-            meta_rows, "query_id string, query_vec array<double>"
+        qmeta_df = spark.createDataFrame(  # (query_id, vector): no DSL here
+            [m[:2] for m in meta_rows], "query_id string, query_vec array<double>"
         )
-        from ..functions import vector as V
-
         base = self.assigned if where is None else self.assigned.filter(where)
         scored = (
             base.join(F.broadcast(pairs_df), "cluster_id")
@@ -1204,10 +561,7 @@ class IVFIndex:
         pair_rows: list[tuple] = []
         meta_rows: list[tuple] = []
         for qid, qv, f in zip(qids, qvecs, per_query):
-            q = np.asarray(qv, dtype=np.float64)
-            nrm = np.linalg.norm(q)
-            if nrm > 0:
-                q = q / nrm
+            q = _unit(qv)
             w, cont, notc = f
             meta_rows.append(
                 (
@@ -1312,6 +666,386 @@ class IVFIndex:
         return knn_ops.topk_per_query(scored, k, "query_id", self.id_col)
 
 
+class _QuantizedIVF(_IVFCore):
+    """The IVF core over uint8 codes: ``coded`` holds (id, cluster_id,
+    codes), ``vectors`` the originals.  Search scores the probed codes
+    approximately, then re-ranks the top ``rerank`` per query EXACTLY
+    by joining the vectors back by id — precision loss is bounded by
+    candidate recall, not code resolution, and with generous rerank
+    the result equals FLAT (which is how the DuckDB oracle validates
+    it).  A codec subclass supplies ``_fit``, ``_encoder`` (one
+    function, used by build and append alike) and ``_scorer``."""
+
+    _TABLES = (
+        ("coded", "codes", ("__batch", "cluster_id")),
+        ("vectors", "vectors", ("__batch",)),
+    )
+
+    @classmethod
+    def _frames(cls, assigned, rows, quant, vec_col, id_col) -> list:
+        encode = cls._encoder(*quant)
+
+        def gen(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col],
+                        "cluster_id": pdf["cluster_id"],
+                        "codes": [c.tobytes() for c in encode(mat)],
+                    }
+                )
+
+        id_type = assigned.schema[id_col].dataType.simpleString()
+        coded = assigned.select(id_col, "cluster_id", vec_col).mapInPandas(
+            gen, f"{id_col} {id_type}, cluster_id int, codes binary"
+        )
+        return [coded, rows]
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str):
+        return cls._load(spark, path)
+
+    @classmethod
+    def append_batch(cls, batch_df: DataFrame, path: str, batch_id: int) -> None:
+        """Incremental maintenance: assign + encode one micro-batch with
+        the SAVED index's frozen centroids and codec, add it as
+        partition ``__batch=<batch_id>`` of both the codes and vectors
+        tables — O(batch), replay-idempotent (the batch's own
+        partitions are dropped before the write).  Frozen-quantizer
+        drift has the same recall caveat and rebuild cadence as
+        ``IVFIndex.append_batch``."""
+        cls._append(batch_df, path, batch_id)
+
+    @classmethod
+    def delete_ids(cls, spark: SparkSession, path: str, ids: Sequence) -> None:
+        """Logical delete by id (tombstone at the INDEX root, shared by
+        the codes and vectors tables): O(ids); ``load`` anti-joins,
+        ``compact`` applies physically to both tables."""
+        append_tombstones(spark, path, ids, cls._read_meta(path)["id_col"])
+
+    @classmethod
+    def compact(
+        cls, spark: SparkSession, path: str, commit_mode: str = "rename"
+    ) -> None:
+        """Fold appended micro-batch partitions into the base (codes and
+        vectors both) and physically apply tombstoned deletes; run
+        between ingest sessions.  ``commit_mode="manifest"`` for object
+        stores (see batchstate.py).  Tombstones are cleared only after
+        BOTH tables folded (a crash between re-applies them — no-op)."""
+        cls._compact(spark, path, commit_mode, cls._read_meta(path)["id_col"])
+
+    def search_batch(
+        self,
+        query_ids: Sequence,
+        query_vecs: Sequence[Sequence[float]],
+        k: int,
+        nprobe: int = 4,
+        rerank: int = 128,
+    ) -> DataFrame:
+        """Codec candidate generation over the partition-pruned code
+        scan, then exact re-rank of the top ``rerank`` per query.
+
+        Shuffle profile: the candidate shuffle carries at most
+        (partitions x queries x rerank) tiny rows; the re-rank join
+        touches only (queries x rerank) vectors by id. The corpus-wide
+        scan reads (id, cluster_id, codes) — never the vectors.
+        """
+        qmat = np.asarray(query_vecs, dtype=np.float64)
+        norms = np.linalg.norm(qmat, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        qmat = qmat / norms
+        nq = qmat.shape[0]
+        width, score = self._scorer(qmat)
+        qid_strs = [str(q) for q in query_ids]
+        probes = sorted(
+            {c for row in qmat for c in self.probe_clusters(row, nprobe)}
+        )
+        rr = int(rerank)
+        id_col, tier = self.id_col, self.tier
+        id_type = self.coded.schema[id_col].dataType.simpleString()
+
+        def scan(batches):
+            import pyarrow as pa
+
+            for rb in batches:
+                n = rb.num_rows
+                if n == 0:
+                    continue
+                ids = rb.column(0).to_numpy(zero_copy_only=False)
+                scores = score(_code_matrix(rb.column(1), n, width, tier))
+                take = min(rr, n)
+                if take < n:
+                    part = np.argpartition(-scores, take - 1, axis=1)[:, :take]
+                else:
+                    part = np.tile(np.arange(n), (nq, 1))
+                out_q = np.repeat(np.arange(nq), part.shape[1])
+                rows = part.ravel()
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([qid_strs[i] for i in out_q], type=pa.string()),
+                        pa.array(ids[rows]),
+                        pa.array(scores[out_q, rows], type=pa.float64()),
+                    ],
+                    names=["query_id", id_col, "approx"],
+                )
+
+        cand = (
+            self.coded.filter(F.col("cluster_id").isin(probes))
+            .select(id_col, "codes")
+            .mapInArrow(scan, schema=f"query_id string, {id_col} {id_type}, approx double")
+        )
+        shortlist = knn_ops.topk_per_query(cand, rr, "query_id", id_col, "approx")
+        # exact re-rank: join original vectors by id (rerank rows per query)
+        qdf = self.coded.sparkSession.createDataFrame(
+            [(qid_strs[i], [float(x) for x in qmat[i]]) for i in range(nq)],
+            "query_id string, query_vec array<double>",
+        )
+        exact = (
+            shortlist.join(self.vectors, id_col)
+            .join(F.broadcast(qdf), "query_id")
+            .withColumn(
+                "similarity",
+                V.dot(F.col(self.vec_col).cast("array<double>"), F.col("query_vec")),
+            )
+            .select("query_id", id_col, "similarity")
+        )
+        return knn_ops.topk_per_query(exact, int(k), "query_id", id_col)
+
+
+class IVFSQIndex(_QuantizedIVF):
+    """IVF + 8-bit scalar quantization — the middle compression tier
+    between FLAT (4 bytes/dim) and PQ (sub-byte/dim): one uint8 per
+    dimension (4x smaller scans), per-dimension (min, step) learned
+    from the training sample (public method — the SQ8 storage every
+    production vector store ships).
+
+    Approximate scoring is exact-in-the-quantized-domain:
+    ``dot(q, dequant(code)) = dot(q, mins) + (codes @ (q*steps))`` —
+    one uint8 GEMM per Arrow batch, no per-row work.  The top
+    ``rerank`` candidates re-rank EXACTLY by id join, so with generous
+    rerank the result equals FLAT (the oracle's check, same contract
+    as IVF-PQ).  Coarse routing reuses the IVF layout: codes live
+    alongside cluster_id, probing is partition pruning."""
+
+    tier = "ivf_sq"
+    _META = "_sq_meta.json"
+    _QUANT = ("mins", "steps")
+
+    def __init__(
+        self,
+        centroids: np.ndarray,
+        mins: np.ndarray,
+        steps: np.ndarray,
+        coded: DataFrame,
+        vectors: DataFrame,
+        vec_col: str,
+        id_col: str,
+    ):
+        self.centroids = centroids
+        self.mins = mins    # (dim,)
+        self.steps = steps  # (dim,) — 0-range dims pinned to step 1
+        self.coded = coded  # id, cluster_id, codes binary(dim)
+        self.vectors = vectors
+        self.vec_col = vec_col
+        self.id_col = id_col
+
+    @classmethod
+    def build(
+        cls,
+        df: DataFrame,
+        n_clusters: int = 16,
+        vec_col: str = "embedding",
+        id_col: str = "vec_id",
+        seed: int = 42,
+        sample_size: int = 50_000,
+    ) -> "IVFSQIndex":
+        return cls._build(df, n_clusters, vec_col, id_col, seed, sample_size)
+
+    @staticmethod
+    def _fit(sample: np.ndarray, seed: int) -> tuple:
+        mins = sample.min(axis=0)
+        rng = sample.max(axis=0) - mins
+        return mins, np.where(rng > 0, rng / 255.0, 1.0)
+
+    @staticmethod
+    def _encoder(mins: np.ndarray, steps: np.ndarray):
+        return lambda mat: np.clip(np.rint((mat - mins) / steps), 0, 255).astype(np.uint8)
+
+    def _scorer(self, qmat: np.ndarray):
+        qs = qmat * self.steps        # (nq, dim)
+        consts = qmat @ self.mins     # (nq,)
+        return len(self.steps), lambda codes: (codes @ qs.T + consts).T
+
+
+class IVFPQIndex(_QuantizedIVF):
+    """IVF + Product Quantization (Jegou, Douze, Schmid: "Product
+    Quantization for Nearest Neighbor Search", TPAMI 2011 — public
+    method). The 100 TB memory story:
+
+    - each vector is stored as ``m`` uint8 codes (one per subspace)
+      in a BINARY column instead of dim float32s — 256-dim vectors
+      compress 1024 bytes -> 16 bytes (m=16), so the scan that feeds
+      candidate generation reads ~64x less data;
+    - search is ADC (asymmetric distance computation): per query, an
+      (m x n_codes) lookup table of subspace dot products is built
+      once on the driver; candidate scores are table-lookups + sums
+      over the codes — one NumPy gather per Arrow batch, no vector
+      math on the corpus;
+    - the top ``rerank`` candidates per query are then re-ranked
+      EXACTLY by joining the original vectors back by id — so
+      precision loss is bounded by candidate recall, not code
+      resolution, and with generous rerank the result equals FLAT
+      (which is how the DuckDB oracle validates it).
+
+    Coarse routing reuses the IVF layout: codes live alongside
+    cluster_id, so probing remains partition pruning.
+    """
+
+    tier = "ivf_pq"
+    _META = "_pq_meta.json"
+    _QUANT = ("codebooks",)
+
+    def __init__(
+        self,
+        centroids: np.ndarray,
+        codebooks: np.ndarray,
+        coded: DataFrame,
+        vectors: DataFrame,
+        vec_col: str,
+        id_col: str,
+    ):
+        self.centroids = centroids  # (n_clusters, dim) coarse
+        self.codebooks = codebooks  # (m, n_codes, sub_dim)
+        self.coded = coded  # id, cluster_id, codes binary
+        self.vectors = vectors  # id -> original vector (re-rank source)
+        self.vec_col = vec_col
+        self.id_col = id_col
+
+    @classmethod
+    def build(
+        cls,
+        df: DataFrame,
+        n_clusters: int = 16,
+        m: int = 16,
+        n_codes: int = 256,
+        vec_col: str = "embedding",
+        id_col: str = "vec_id",
+        seed: int = 42,
+        sample_size: int = 50_000,
+    ) -> "IVFPQIndex":
+        return cls._build(
+            df, n_clusters, vec_col, id_col, seed, sample_size, m=m, n_codes=n_codes
+        )
+
+    @staticmethod
+    def _fit(sample: np.ndarray, seed: int, m: int, n_codes: int) -> tuple:
+        dim = sample.shape[1]
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        s = dim // m
+        # r15: the codebook fit is bounded by a deterministic even
+        # stride over the (already hash-spread) sample — 100x the
+        # default code count is ample for 256-cell subspace k-means,
+        # and the fit cost stops scaling with sample_size.  Below the
+        # cap (every test SF; sf0.1 samples 2,000 rows) the matrix is
+        # untouched, so codebooks — and the value-checked ivf_pq_search
+        # results — are bit-identical.
+        fit = sample
+        if fit.shape[0] > _PQ_FIT_CAP:
+            idx = np.linspace(0, fit.shape[0] - 1, _PQ_FIT_CAP).astype(np.int64)
+            fit = fit[idx]
+        codebooks = np.stack(
+            [
+                _kmeans_l2(fit[:, j * s : (j + 1) * s], n_codes, seed + j)
+                for j in range(m)
+            ]
+        )  # (m, k_j<=n_codes, s) — all k_j equal since same sample size
+        return (codebooks,)
+
+    @staticmethod
+    def _encoder(codebooks: np.ndarray):
+        """m uint8 PQ codes per row — one argmin per subspace."""
+        mm, _, s = codebooks.shape
+
+        def encode(mat):
+            codes = np.empty((mat.shape[0], mm), dtype=np.uint8)
+            for j in range(mm):
+                sub = mat[:, j * s : (j + 1) * s]
+                d2 = -2.0 * sub @ codebooks[j].T + (codebooks[j] ** 2).sum(axis=1)
+                codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
+            return codes
+
+        return encode
+
+    def _scorer(self, qmat: np.ndarray):
+        nq = qmat.shape[0]
+        mcount, _, s = self.codebooks.shape
+        # per-query LUT: luts[q, j, c] = <q_sub_j, codebook_j[c]>
+        luts = np.einsum(
+            "qjs,jcs->qjc", qmat.reshape(nq, mcount, s), self.codebooks
+        )  # (nq, m, n_codes)
+
+        def score(codes):
+            # scores[q, i] = sum_j luts[q, j, codes[i, j]]
+            scores = np.zeros((nq, codes.shape[0]))
+            for j in range(mcount):
+                scores += luts[:, j, codes[:, j]]
+            return scores
+
+        return mcount, score
+
+
+IVF_CLASSES = {c.tier: c for c in (IVFIndex, IVFSQIndex, IVFPQIndex)}
+
+
+def _recall_probe(emb: DataFrame, k: int, n_queries: int, vec_col: str, id_col: str, seed: int):
+    """The tuners' shared yardstick: ``n_queries`` held-in query
+    vectors (seeded hash order), their exact brute-force top-k, and
+    ``recall_of(rows)`` scoring a search's result rows against it."""
+    qrows = (
+        emb.select(id_col, vec_col)
+        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
+        .limit(int(n_queries))
+        .collect()
+    )
+    qids = [str(r[id_col]) for r in qrows]
+    qvecs = [list(r[vec_col]) for r in qrows]
+    exact: dict[str, set] = {}
+    ground = knn_ops.knn_block(emb, qids, qvecs, k, vec_col=vec_col, id_col=id_col)
+    for r in ground.collect():
+        exact.setdefault(r["query_id"], set()).add(r[id_col])
+
+    def recall_of(rows) -> float:
+        got: dict[str, set] = {}
+        for r in rows:
+            got.setdefault(r["query_id"], set()).add(r[id_col])
+        per_q = [len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact]
+        return sum(per_q) / len(per_q)
+
+    return qids, qvecs, recall_of
+
+
+def _rerank_sweep(idx, qids, qvecs, k, nprobe, target_recall, recall_of, point):
+    """Raise a quantized index's rerank depth (k, 2k, 5k, 10k) until
+    recall meets the target.  Returns ``(sweep, chosen)``: one
+    ``point(rerank, recall)`` record per depth run, and the first
+    record that met the target (``None`` if none did)."""
+    sweep: list[dict] = []
+    for rerank in (k, 2 * k, 5 * k, 10 * k):
+        r = recall_of(
+            idx.search_batch(qids, qvecs, k, nprobe=nprobe, rerank=rerank).collect()
+        )
+        sweep.append(point(int(rerank), round(r, 4)))
+        if r >= target_recall:
+            return sweep, sweep[-1]
+    return sweep, None
+
+
 def tune_ivf(
     emb: DataFrame,
     target_recall: float = 0.95,
@@ -1347,26 +1081,7 @@ def tune_ivf(
     """
     from ..materialize import materialize
 
-    qdf = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(int(n_queries))
-    )
-    qrows = qdf.collect()
-    qids = [str(r[id_col]) for r in qrows]
-    qvecs = [list(r[vec_col]) for r in qrows]
-    exact: dict[str, set] = {}
-    ground = knn_ops.knn_block(emb, qids, qvecs, k, vec_col=vec_col, id_col=id_col)
-    for r in ground.collect():
-        exact.setdefault(r["query_id"], set()).add(r[id_col])
-
-    def recall_of(rows) -> float:
-        got: dict[str, set] = {}
-        for r in rows:
-            got.setdefault(r["query_id"], set()).add(r[id_col])
-        per_q = [len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact]
-        return sum(per_q) / len(per_q)
-
+    qids, qvecs, recall_of = _recall_probe(emb, k, n_queries, vec_col, id_col, seed)
     sweep: list[dict] = []
     viable: list[dict] = []
     n_rows = emb.count()
@@ -1412,23 +1127,13 @@ def tune_ivf(
         chosen: dict | None = None
         for m in m_cands:
             pq = IVFPQIndex.build(
-                emb,
-                n_clusters=out["n_clusters"],
-                m=m,
-                vec_col=vec_col,
-                id_col=id_col,
+                emb, n_clusters=out["n_clusters"], m=m, vec_col=vec_col, id_col=id_col
             )
-            for rerank in (k, 2 * k, 5 * k, 10 * k):
-                r = recall_of(
-                    pq.search_batch(
-                        qids, qvecs, k, nprobe=out["nprobe"], rerank=rerank
-                    ).collect()
-                )
-                point = {"m": m, "rerank": int(rerank), "pq_recall": round(r, 4)}
-                pq_sweep.append(point)
-                if r >= target_recall:
-                    chosen = point
-                    break
+            points, chosen = _rerank_sweep(
+                pq, qids, qvecs, k, out["nprobe"], target_recall, recall_of,
+                lambda rr, r: {"m": m, "rerank": rr, "pq_recall": r},
+            )
+            pq_sweep += points
             if chosen:
                 break
         best_pq = chosen or max(pq_sweep, key=lambda p: (p["pq_recall"], -p["m"]))
@@ -1457,42 +1162,14 @@ def tune_ivf_sq(
     "sq_sweep"}; merge into the tune_ivf dict for the full picture."""
     if target_recall is None:
         target_recall = float(tuned.get("target_recall", 0.95))
-    qdf = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(int(n_queries))
-    )
-    qrows = qdf.collect()
-    qids = [str(r[id_col]) for r in qrows]
-    qvecs = [list(r[vec_col]) for r in qrows]
-    exact: dict[str, set] = {}
-    ground = knn_ops.knn_block(emb, qids, qvecs, k, vec_col=vec_col, id_col=id_col)
-    for r in ground.collect():
-        exact.setdefault(r["query_id"], set()).add(r[id_col])
-
-    def recall_of(rows) -> float:
-        got: dict[str, set] = {}
-        for r in rows:
-            got.setdefault(r["query_id"], set()).add(r[id_col])
-        per_q = [len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact]
-        return sum(per_q) / len(per_q)
-
+    qids, qvecs, recall_of = _recall_probe(emb, k, n_queries, vec_col, id_col, seed)
     sq = IVFSQIndex.build(
         emb, n_clusters=tuned["n_clusters"], vec_col=vec_col, id_col=id_col
     )
-    sweep: list[dict] = []
-    chosen: dict | None = None
-    for rerank in (k, 2 * k, 5 * k, 10 * k):
-        r = recall_of(
-            sq.search_batch(
-                qids, qvecs, k, nprobe=tuned["nprobe"], rerank=rerank
-            ).collect()
-        )
-        point = {"sq_rerank": int(rerank), "sq_recall": round(r, 4)}
-        sweep.append(point)
-        if r >= target_recall:
-            chosen = point
-            break
+    sweep, chosen = _rerank_sweep(
+        sq, qids, qvecs, k, tuned["nprobe"], target_recall, recall_of,
+        lambda rr, r: {"sq_rerank": rr, "sq_recall": r},
+    )
     best = chosen or max(sweep, key=lambda p: p["sq_recall"])
     return {**best, "sq_sweep": sweep}
 
@@ -1503,8 +1180,6 @@ _TOMBSTONES = "_tombstones"  # underscore prefix: parquet readers skip it
 
 
 def _tombstone_path(path: str) -> str:
-    import os
-
     return os.path.join(path, _TOMBSTONES)
 
 
@@ -1529,8 +1204,6 @@ def append_tombstones(
 def load_tombstones(spark: SparkSession, path: str, id_col: str = "vec_id"):
     """Tombstoned ids as a 1-column DataFrame, or None when there are
     none recorded."""
-    import os
-
     tp = _tombstone_path(path)
     if not os.path.exists(tp):
         return None

@@ -1,11 +1,11 @@
 """Unified query router: pick the ANN tier for a vector search.
 
-The repo grew five search entry points (brute-force FLAT
-``knn.knn_single``, ``IVFIndex.search``/``search_filtered``,
-``IVFSQIndex.search_batch``, ``IVFPQIndex.search_batch``) and callers
-had to choose manually.  :func:`choose_tier` encodes the choice as an
-inspectable decision, :func:`routed_search` dispatches it; the
-``Collection.query_embedding(index="auto")`` surface wraps both.
+A vector query runs on one of five tiers: brute-force FLAT (``knn``),
+the three IVF tiers (one core, ``ann.IVF_CLASSES``) or a served HNSW
+graph.  :func:`choose_tier` encodes the choice as an inspectable
+decision, sized by one operating-point function; one decision step
+serves :func:`routed_search` and :func:`routed_search_batch`, which the
+``Collection.query_embedding(index="auto")`` surface wraps.
 
 Tier ladder and DOCUMENTED thresholds (all overridable per call):
 
@@ -39,8 +39,8 @@ sweeps beat formulas):
 - ``nprobe`` from ``target_recall``: >= 0.999 probes everything (the
   exact-identity setting the oracles use), >= 0.99 probes 1/4 of the
   cells, >= 0.95 probes 1/8, below that 1/16.
-- ``rerank``: 10k for SQ8, 20k for PQ (PQ's ADC is lossier, so its
-  shortlist is deeper).
+- ``rerank``: max(10k, 100) for SQ8, max(20k, 200) for PQ (PQ's ADC
+  is lossier, so its shortlist is deeper) — served indexes included.
 """
 
 from __future__ import annotations
@@ -69,6 +69,32 @@ def _nprobe(nlist: int, target_recall: float) -> int:
     if target_recall >= 0.95:
         return max(nlist // 8, 1)
     return max(nlist // 16, 1)
+
+
+def _operating_point(
+    tier: str, reason: str, nlist: int = 0, k: int = 10,
+    target_recall: float = 0.95, tuned: dict | None = None,
+) -> dict:
+    """The decision dict for ``tier`` over ``nlist`` cells: nprobe from
+    the recall target, the rerank depth of the quantized tiers, then a
+    measured ``tuned`` point's overrides.  Index params are ``None``
+    for flat."""
+    if tier == "flat":
+        return {
+            "tier": tier, "n_clusters": None, "nprobe": None,
+            "rerank": None, "reason": reason,
+        }
+    nprobe = _nprobe(nlist, target_recall)
+    rerank = {"ivf_sq": max(10 * k, 100), "ivf_pq": max(20 * k, 200)}.get(tier)
+    if tuned:
+        nlist = int(tuned.get("n_clusters", nlist))
+        nprobe = int(tuned.get("nprobe", nprobe))
+        if tuned.get("rerank") is not None and rerank is not None:
+            rerank = int(tuned["rerank"])
+    return {
+        "tier": tier, "n_clusters": nlist, "nprobe": min(nprobe, nlist),
+        "rerank": rerank, "reason": reason,
+    }
 
 
 def choose_tier(
@@ -114,29 +140,11 @@ def choose_tier(
             f"n_docs {n_docs} > flat_max_docs {flat_max_docs}; "
             f"target_recall {target_recall} keeps full-precision vectors"
         )
-
-    if tier == "flat":
-        return {
-            "tier": tier, "n_clusters": None, "nprobe": None,
-            "rerank": None, "reason": reason,
-        }
-    nlist = _nlist(n_docs)
-    nprobe = _nprobe(nlist, target_recall)
-    rerank = None
-    if tier == "ivf_sq":
-        rerank = max(10 * k, 100)
-    elif tier == "ivf_pq":
-        rerank = max(20 * k, 200)
-    if tuned:
-        nlist = int(tuned.get("n_clusters", nlist))
-        nprobe = int(tuned.get("nprobe", nprobe))
-        if tuned.get("rerank") is not None and rerank is not None:
-            rerank = int(tuned["rerank"])
+    if tuned and tier != "flat":
         reason += " (tuned operating point)"
-    return {
-        "tier": tier, "n_clusters": nlist, "nprobe": min(nprobe, nlist),
-        "rerank": rerank, "reason": reason,
-    }
+    return _operating_point(
+        tier, reason, _nlist(n_docs), k, target_recall, tuned
+    )
 
 
 def forced_decision(
@@ -151,27 +159,9 @@ def forced_decision(
     / ``tuned``)."""
     if tier not in TIERS:
         raise ValueError(f"unknown tier {tier!r}; expected one of {TIERS}")
-    if tier == "flat":
-        return {
-            "tier": "flat", "n_clusters": None, "nprobe": None,
-            "rerank": None, "reason": "caller-forced tier",
-        }
-    nlist = _nlist(n_docs)
-    nprobe = _nprobe(nlist, target_recall)
-    rerank = None
-    if tier == "ivf_sq":
-        rerank = max(10 * k, 100)
-    elif tier == "ivf_pq":
-        rerank = max(20 * k, 200)
-    if tuned:
-        nlist = int(tuned.get("n_clusters", nlist))
-        nprobe = int(tuned.get("nprobe", nprobe))
-        if tuned.get("rerank") is not None and rerank is not None:
-            rerank = int(tuned["rerank"])
-    return {
-        "tier": tier, "n_clusters": nlist, "nprobe": min(nprobe, nlist),
-        "rerank": rerank, "reason": "caller-forced tier",
-    }
+    return _operating_point(
+        tier, "caller-forced tier", _nlist(n_docs), k, target_recall, tuned
+    )
 
 
 def _filtered_tier_error(tier: str) -> str:
@@ -200,22 +190,12 @@ def tier_of(index) -> str:
         # exact-ef mapping (>= every shard's size), search_batch(spark,
         # ...) for dispatch — so one tier covers both.
         return "hnsw"
-    if isinstance(index, A.IVFPQIndex):
-        return "ivf_pq"
-    if isinstance(index, A.IVFSQIndex):
-        return "ivf_sq"
-    if isinstance(index, A.IVFIndex):
-        return "ivf"
+    if isinstance(index, A._IVFCore):
+        return index.tier
     raise TypeError(f"not a served ANN index: {type(index).__name__}")
 
 
-_EMPTY_FLAT_DECISION = {
-    "tier": "flat", "n_clusters": None, "nprobe": None,
-    "rerank": None, "reason": "empty corpus frame",
-}
-
-
-def _build_tier_or_flat(A, tier, decision, df, vec_col, id_col, seed):
+def _build_tier_or_flat(decision, df, vec_col, id_col, seed):
     """Build the decided tier's on-the-fly index, demoting an EMPTY
     corpus frame to a FLAT no-op scan instead of crashing the
     quantizer trainer.
@@ -231,20 +211,60 @@ def _build_tier_or_flat(A, tier, decision, df, vec_col, id_col, seed):
     lands here safely: the build is the first job that touches the
     rows, it raises, and the query answers empty through FLAT.
     Returns ``(index, decision)``."""
-    builders = {
-        "ivf": A.IVFIndex.build,
-        "ivf_sq": A.IVFSQIndex.build,
-        "ivf_pq": A.IVFPQIndex.build,
-    }
-    if tier not in builders:
+    from . import ann as A
+
+    cls = A.IVF_CLASSES.get(decision["tier"])
+    if cls is None:
         return None, decision
     try:
-        return builders[tier](
+        return cls.build(
             df, n_clusters=decision["n_clusters"],
             vec_col=vec_col, id_col=id_col, seed=seed,
         ), decision
     except A.EmptyCorpusError:
-        return None, dict(_EMPTY_FLAT_DECISION)
+        return None, _operating_point("flat", "empty corpus frame")
+
+
+def _route(
+    df, dim, k, vec_col, id_col, index, target_recall, where, tuned, seed,
+    decision, n_docs, allowed, thresholds,
+):
+    """The decision step both entry points share (see
+    :func:`routed_search`); a served graph's ``ef`` follows the recall
+    target, >= 0.999 walking exhaustively.  Returns ``(index,
+    decision)``."""
+    if allowed is not None and (
+        # isinstance first (r12, ADVICE): a string tier name must hit
+        # THIS ValueError, not tier_of's "not a served ANN index"
+        index is None
+        or isinstance(index, str)
+        or tier_of(index) != "hnsw"
+    ):
+        raise ValueError(
+            "allowed id-set filtering is the served graph tier's "
+            "filter form; pass a Column `where` for every other tier"
+        )
+    if index is not None:
+        tier = tier_of(index)
+        if where is not None and tier != "ivf":
+            raise ValueError(_filtered_tier_error(tier))
+        if tier == "hnsw":
+            ef = index.n_points() if target_recall >= 0.999 else max(4 * k, 64)
+            return index, {"tier": tier, "ef": ef}
+        return index, _operating_point(
+            tier, "served index available", len(index.centroids), k,
+            target_recall,
+        )
+    if decision is None:
+        if n_docs is None:
+            n_docs = df.count()
+        decision = choose_tier(
+            n_docs, dim, k=k, target_recall=target_recall,
+            filtered=where is not None, tuned=tuned, **thresholds,
+        )
+    if where is not None and decision["tier"] in ("ivf_sq", "ivf_pq"):
+        raise ValueError(_filtered_tier_error(decision["tier"]))
+    return _build_tier_or_flat(decision, df, vec_col, id_col, seed)
 
 
 def routed_search(
@@ -279,66 +299,26 @@ def routed_search(
     rows with ``similarity``, highest first (quantized tiers return
     ``(id, similarity)``; flat tiers carry the input columns through).
     """
-    from . import ann as A
     from . import knn as K
 
     qv = [float(x) for x in query_vec]
-    if allowed is not None and (
-        # isinstance first (r12, ADVICE): a string tier name must hit
-        # THIS ValueError, not tier_of's "not a served ANN index"
-        index is None
-        or isinstance(index, str)
-        or tier_of(index) != "hnsw"
-    ):
-        raise ValueError(
-            "allowed id-set filtering is the served graph tier's "
-            "filter form; pass a Column `where` for every other tier"
-        )
-    if index is not None:
-        tier = tier_of(index)
-        if where is not None and tier != "ivf":
-            raise ValueError(_filtered_tier_error(tier))
-        if tier == "hnsw":
-            # served graph index (operators/hnsw.py): ef from the
-            # recall target — >= 0.999 walks exhaustively (exact)
-            ef = (
-                index.n_points()
-                if target_recall >= 0.999
-                else max(4 * k, 64)
-            )
-            return index.search_batch(
-                df.sparkSession, ["0"], [qv], k, ef=ef, allowed=allowed
-            ).drop("query_id")
-        nlist = len(index.centroids)
-        nprobe = _nprobe(nlist, target_recall)
-        rerank = max((20 if tier == "ivf_pq" else 10) * k, 100)
-        decision = {
-            "tier": tier, "n_clusters": nlist, "nprobe": nprobe,
-            "rerank": rerank, "reason": "served index available",
-        }
-    else:
-        if decision is None:
-            if n_docs is None:
-                n_docs = df.count()
-            decision = choose_tier(
-                n_docs, len(qv), k=k, target_recall=target_recall,
-                filtered=where is not None, tuned=tuned, **thresholds,
-            )
-        tier = decision["tier"]
-        if where is not None and tier in ("ivf_sq", "ivf_pq"):
-            raise ValueError(_filtered_tier_error(tier))
-        index, decision = _build_tier_or_flat(
-            A, tier, decision, df, vec_col, id_col, seed
-        )
-
-    if decision["tier"] == "flat":
+    index, decision = _route(
+        df, len(qv), k, vec_col, id_col, index, target_recall, where,
+        tuned, seed, decision, n_docs, allowed, thresholds,
+    )
+    tier = decision["tier"]
+    if tier == "hnsw":
+        return index.search_batch(
+            df.sparkSession, ["0"], [qv], k, ef=decision["ef"], allowed=allowed
+        ).drop("query_id")
+    if tier == "flat":
         base = df.filter(where) if where is not None else df
         return K.knn_single(base, qv, k, vec_col=vec_col, id_col=id_col)
     if where is not None:
         return index.search_filtered(
             qv, k, nprobe=decision["nprobe"], where=where
         )
-    if decision["tier"] == "ivf":
+    if tier == "ivf":
         return index.search(qv, k, nprobe=decision["nprobe"])
     return index.search_batch(
         ["0"], [qv], k, nprobe=decision["nprobe"],
@@ -369,9 +349,10 @@ def routed_search_batch(
     answers one query at a time; Spark's win is scoring the batch in
     one corpus pass, SURVEY §7.1).
 
-    The decision logic is byte-identical to :func:`routed_search` (one
-    ladder, not two): a served ``index`` wins, else :func:`choose_tier`
-    picks from corpus size / recall / filteredness.  Dispatch per tier:
+    The decision step is the one :func:`routed_search` runs
+    (:func:`_route` — one ladder, not two): a served ``index`` wins,
+    else :func:`choose_tier` picks from corpus size / recall /
+    filteredness.  Dispatch per tier:
 
     - **FLAT** → :func:`..knn.knn_block` (one GEMM per Arrow batch of
       the corpus scores ALL queries; ``where`` filters the scan first).
@@ -390,7 +371,6 @@ def routed_search_batch(
     ``allowed`` (r11) is the graph tier's filter form — ONE
     materialized id set shared by the whole batch (see
     :func:`routed_search`)."""
-    from . import ann as A
     from . import knn as K
 
     qvecs = [[float(x) for x in qv] for qv in query_vecs]
@@ -404,59 +384,22 @@ def routed_search_batch(
             f"query_ids ({len(qids)}) and query_vecs "
             f"({len(qvecs)}) must be the same length"
         )
-    if allowed is not None and (
-        # isinstance first (r12, ADVICE): a string tier name must hit
-        # THIS ValueError, not tier_of's "not a served ANN index"
-        index is None
-        or isinstance(index, str)
-        or tier_of(index) != "hnsw"
-    ):
-        raise ValueError(
-            "allowed id-set filtering is the served graph tier's "
-            "filter form; pass a Column `where` for every other tier"
+    index, decision = _route(
+        df, len(qvecs[0]), k, vec_col, id_col, index, target_recall, where,
+        tuned, seed, decision, n_docs, allowed, thresholds,
+    )
+    tier = decision["tier"]
+    if tier == "hnsw":
+        return index.search_batch(
+            df.sparkSession, qids, qvecs, k, ef=decision["ef"], allowed=allowed
         )
-    if index is not None:
-        tier = tier_of(index)
-        if where is not None and tier != "ivf":
-            raise ValueError(_filtered_tier_error(tier))
-        if tier == "hnsw":
-            ef = (
-                index.n_points()
-                if target_recall >= 0.999
-                else max(4 * k, 64)
-            )
-            return index.search_batch(
-                df.sparkSession, qids, qvecs, k, ef=ef, allowed=allowed
-            )
-        nlist = len(index.centroids)
-        decision = {
-            "tier": tier, "n_clusters": nlist,
-            "nprobe": _nprobe(nlist, target_recall),
-            "rerank": max((20 if tier == "ivf_pq" else 10) * k, 100),
-            "reason": "served index available",
-        }
-    else:
-        if decision is None:
-            if n_docs is None:
-                n_docs = df.count()
-            decision = choose_tier(
-                n_docs, len(qvecs[0]), k=k, target_recall=target_recall,
-                filtered=where is not None, tuned=tuned, **thresholds,
-            )
-        tier = decision["tier"]
-        if where is not None and tier in ("ivf_sq", "ivf_pq"):
-            raise ValueError(_filtered_tier_error(tier))
-        index, decision = _build_tier_or_flat(
-            A, tier, decision, df, vec_col, id_col, seed
-        )
-
-    if decision["tier"] == "flat":
+    if tier == "flat":
         base = df.filter(where) if where is not None else df
         return K.knn_block(
             base, qids, qvecs, k,
             vec_col=vec_col, id_col=id_col, precision=precision,
         )
-    if decision["tier"] == "ivf":
+    if tier == "ivf":
         return index.search_batch(
             qids, qvecs, k,
             nprobe=decision["nprobe"], where=where,

@@ -78,6 +78,66 @@ def pq_index(emb):
     )
 
 
+def _partition_chain(table_dir):
+    """Partition columns from ``table_dir`` down to its parquet files
+    (following the first partition dir at each level)."""
+    import os
+
+    chain, d = [], table_dir
+    while True:
+        parts = sorted(e for e in os.listdir(d) if "=" in e)
+        if not parts:
+            assert any(e.endswith(".parquet") for e in os.listdir(d)), d
+            return chain
+        chain.append(parts[0].split("=")[0])
+        d = os.path.join(d, parts[0])
+
+
+def test_saved_index_format_contract(emb, index, pq_index, tmp_path):
+    """The persisted layout of each tier — meta file name and keys,
+    table directories and their partitioning — is a compatibility
+    contract: indexes saved by earlier versions must keep loading."""
+    import json
+    import os
+
+    import numpy as np
+
+    sq_index = A.IVFSQIndex.build(
+        emb, n_clusters=4, vec_col="embedding", id_col="vec_id"
+    )
+    cases = [
+        (index, "_centroids.json", None, {"": ["__batch", "cluster_id"]}),
+        (
+            sq_index, "_sq_meta.json",
+            ["centroids", "mins", "steps", "vec_col", "id_col"],
+            {"codes": ["__batch", "cluster_id"], "vectors": ["__batch"]},
+        ),
+        (
+            pq_index, "_pq_meta.json",
+            ["centroids", "codebooks", "vec_col", "id_col"],
+            {"codes": ["__batch", "cluster_id"], "vectors": ["__batch"]},
+        ),
+    ]
+    for idx, meta_name, keys, tables in cases:
+        path = str(tmp_path / meta_name.strip("_").split(".")[0])
+        idx.save(path)
+        assert [e for e in os.listdir(path) if e.endswith(".json")] == [meta_name]
+        with open(os.path.join(path, meta_name)) as f:
+            meta = json.load(f)
+        if keys is None:  # flat IVF: the bare centroid list
+            assert isinstance(meta, list)
+            assert np.array_equal(np.asarray(meta), idx.centroids)
+        else:
+            assert list(meta) == keys
+            assert (meta["vec_col"], meta["id_col"]) == ("embedding", "vec_id")
+            for k in keys[:-2]:
+                assert np.array_equal(np.asarray(meta[k]), getattr(idx, k))
+        for sub, chain in tables.items():
+            table = os.path.join(path, sub)
+            assert {e for e in os.listdir(table) if "=" in e} == {"__batch=-1"}
+            assert _partition_chain(table) == chain
+
+
 def test_pq_fit_cap_binds_and_stays_deterministic(emb, monkeypatch):
     """r15: the per-subquantizer codebook fit subsamples the training
     matrix with a deterministic even stride above _PQ_FIT_CAP. With the

@@ -399,6 +399,17 @@ def test_collection_ann_index(spark, db):
     ]
     assert got_pq == exact
 
+    # SQ8: a served index and an on-the-fly kind="ivf_sq" build both go
+    # through the quantized tiers' batch search
+    sq_idx = c.build_ann_index(n_clusters=4, kind="ivf_sq")
+    got_sq = [r["id"] for r in c.query_embedding_ann(q, 5, index=sq_idx, nprobe=4).collect()]
+    assert got_sq == exact
+    got_sq_kind = [
+        r["id"]
+        for r in c.query_embedding_ann(q, 5, kind="ivf_sq", n_clusters=4, nprobe=4).collect()
+    ]
+    assert got_sq_kind == exact
+
 
 def test_export_validation_does_not_destroy_existing_file(spark, tmp_path, db):
     """A bad encryption key or unknown collection name must raise BEFORE

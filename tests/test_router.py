@@ -130,6 +130,31 @@ def test_served_index_wins(emb, qvec):
     assert got == _flat_top(emb, qvec)
 
 
+def test_served_pq_rerank_matches_forced_decision(emb, qvec, monkeypatch):
+    """A served PQ index re-ranks as deep as the ladder would: the
+    served branch of both entry points takes its rerank from the same
+    operating point as forced_decision (max(20k, 200) — at k=5 that is
+    200, not 100)."""
+    from chromem_go_spark.operators import ann as A
+
+    idx = A.IVFPQIndex.build(
+        emb, n_clusters=8, m=16, vec_col="embedding", id_col="vec_id"
+    )
+    want = R.forced_decision("ivf_pq", emb.count(), k=5)["rerank"]
+    assert want == 200
+    seen = []
+    real = idx.search_batch
+
+    def spy(*args, **kwargs):
+        seen.append(kwargs["rerank"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(idx, "search_batch", spy)
+    R.routed_search(emb, qvec, 5, index=idx)
+    R.routed_search_batch(emb, ["a", "b"], [qvec, qvec], 5, index=idx)
+    assert seen == [want, want]
+
+
 def test_filtered_quantized_raises(emb, qvec):
     n = emb.count()
     decision = R.forced_decision("ivf_sq", n)
