@@ -22,10 +22,12 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 from collections.abc import Mapping, Sequence
+from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import errors as E
@@ -35,7 +37,14 @@ from .locking import write_lock
 from .materialize import materialize
 from .functions import vector as V
 from .operators import knn as knn_ops
-from .operators.filters import combined_predicate, validate_where_document
+from .operators import router as R
+from .operators.filters import (
+    and_fold_groups,
+    and_fold_patterns,
+    combined_predicate,
+    contains_pattern_groups,
+    validate_where_document,
+)
 
 EmbeddingFunc = Callable[[str], Sequence[float]]
 
@@ -47,6 +56,20 @@ EmbeddingFunc = Callable[[str], Sequence[float]]
 # pass n_buckets explicitly to size for the deployment, or 0 to opt out
 # (flat single-directory layout).
 DEFAULT_N_BUCKETS = 64
+
+
+@dataclass(frozen=True)
+class _QueryPlan:
+    """What :meth:`Collection._plan_query` decided for one vector call;
+    the entry points dispatch on it."""
+
+    pre: Column | None  # the global predicate; None without a filter
+    frame: DataFrame  # the frame to scan or build over
+    n_docs: int | None  # the effective n the decision was sized on
+    index: object | None  # the served index, if one is used
+    decision: dict | None  # the router decision; None on the exact path
+    allowed: set | list | None  # the graph tier's id set(s)
+    fallback: str | None  # why a requested index was not used
 
 
 class Collection:
@@ -279,7 +302,7 @@ class Collection:
         for d in docs:
             if not d.id:
                 raise ValueError("id is empty")
-            emb = list(d.embedding or [])
+            emb = [float(x) for x in d.embedding or []]
             if not emb:
                 if not d.content:
                     raise ValueError("either embedding or content must be filled")
@@ -463,32 +486,21 @@ class Collection:
     #: (50k/200k/500k docs, q=64, ~5% selectivity) measured FLAT
     #: faster at EVERY size — no crossover exists in the measured
     #: range, so the constant sits above the single-graph 1M-point
-    #: cap: FLAT by default, graph opt-in
-    #: (``HNSW_BATCH_FILTER_PREFER_GRAPH``).  Callers who already
+    #: cap: FLAT unless a graph is that large.  Callers who already
     #: HOLD per-query allowed id sets pay no materializing scan and
     #: should call ``HNSWIndex.search_batch(allowed_per_query=...)``
     #: directly — that path stays ef-bounded and is the graph
     #: filter's real home (the hnsw_batch_per_filter driver row).
     HNSW_BATCH_FILTER_MIN_POINTS = 2_000_000
 
-    #: opt-in: force query_batch's per-query-filtered serve through
-    #: the graph mask-scan path at any corpus size (the pre-r13
-    #: routing).  Correctness is identical on both paths (oracle
-    #: identity at exact settings); this is a wall-clock knob.
-    HNSW_BATCH_FILTER_PREFER_GRAPH = False
-
-    def _materialize_filter_ids(self, where, where_document,
-                                extended_filters) -> set | None:
+    def _materialize_filter_ids(self, pred) -> set | None:
         """The filter's matching ids as a bounded set — the served
         graph tier's filter form (eligibility-gated walks; see
         operators/hnsw.py and router.routed_search ``allowed``).  One
-        collect job over the SAME predicate composition the exact path
-        scans with (semantics identical by construction); ``None``
-        when the match count exceeds ``HNSW_FILTER_MAX_IDS`` (callers
-        fall back to the exact scan)."""
-        pred = self._combined_predicate_ex(
-            where, where_document, extended_filters
-        )
+        collect job over the SAME predicate the exact path scans with
+        (semantics identical by construction); ``None`` when the match
+        count exceeds ``HNSW_FILTER_MAX_IDS`` (callers fall back to the
+        exact scan)."""
         cap = int(self.HNSW_FILTER_MAX_IDS)
         rows = self.df.filter(pred).select("id").limit(cap + 1).collect()
         if len(rows) > cap:
@@ -738,164 +750,38 @@ class Collection:
         served-graph results must join back on ``id`` (or pass no
         served index to keep the exact scan's row shape).
         """
-        if query_embedding is None or len(query_embedding) == 0:
-            raise ValueError(E.ERR_QUERY_EMBEDDING_EMPTY)
-        if n_results <= 0:
-            raise ValueError(E.ERR_NRESULTS_POSITIVE)
-        n_docs = self.count()
-        if n_results > n_docs:
-            raise ValueError(E.ERR_NRESULTS_TOO_LARGE)
+        qv = self._query_vectors([query_embedding])[0]
+        n_docs = self._check_n_results(n_results)
         validate_where_document(where_document)
-
-        qv = [float(x) for x in query_embedding]
         if negative_embedding is not None and negative_mode == "subtract":
             qv = knn_ops.negative_subtract_query(qv, negative_embedding)
-
-        # Routed ANN path — for every query shape except negative
-        # FILTER mode, which needs per-candidate negative similarities
-        # only the exact kernel computes (semantics first).  Negative
-        # SUBTRACT routes since r11: it is a pure query-vector rewrite
-        # (already applied to qv above — reference collection.go:
-        # QueryWithOptions subtract), so the routed tiers see an
-        # ordinary query and every tier rule applies unchanged.
-        # ``where_document`` routes too since r8: its predicate is a
-        # Column over carried columns (full-vector tiers only — the
-        # router's filtered rule), and a fresh gram index pre-prunes
-        # the corpus BEFORE tier dispatch, so one call composes
-        # embed -> $contains prune -> routed ANN.
-        routable = index is not None and (
-            negative_embedding is None or negative_mode == "subtract"
+        # negative FILTER mode needs per-candidate negative similarities
+        # only the exact kernel computes; SUBTRACT is a pure query-vector
+        # rewrite (applied above), so the routed tiers see a plain query
+        routable = negative_embedding is None or negative_mode == "subtract"
+        plan = self._plan_query(
+            index if routable else None, int(n_results), len(qv), where,
+            where_document, extended_filters, target_recall, tuned,
+            n_docs=n_docs,
         )
-        served_allowed = None
-        if routable and not isinstance(index, str):
-            # a SERVED index that cannot express a filter falls back to
-            # the exact scan path (pre-r8 behavior preserved): only the
-            # flat-vector IVF tier applies predicates below scoring —
-            # EXCEPT the graph tier (r11): HNSW serves a filter as an
-            # eligibility-gated walk over the filter's materialized id
-            # set (hnsw.py module doc — the reference's
-            # filter-before-scoring semantics, collection.go:521, at
-            # the index's recall contract instead of a silent exact
-            # downgrade).  Beyond HNSW_FILTER_MAX_IDS matching ids the
-            # set costs more to ship than the scan saves — exact path.
-            from .operators import router as R
-
-            if (where or where_document) and R.tier_of(index) != "ivf":
-                if R.tier_of(index) == "hnsw":
-                    served_allowed = self._materialize_filter_ids(
-                        where, where_document, extended_filters
-                    )
-                    if served_allowed is None:
-                        routable = False
-                else:
-                    routable = False
-        if routable:
-            from .operators import router as R
-            from .operators.filters import where_document_predicate
-
-            if extended_filters:
-                from .operators.filters import (
-                    contains_pattern_groups,
-                    extended_where_predicate,
+        if plan.decision is None:
+            if negative_embedding is not None and negative_mode == "filter":
+                return knn_ops.knn_negative_filter(
+                    plan.frame,
+                    qv,
+                    negative_embedding,
+                    n_results,
+                    threshold=negative_filter_threshold,
                 )
-
-                pre = (
-                    extended_where_predicate(where, content_col="content")
-                    if where
-                    else None
-                )
-                # r9: groups carry the prune through $or too — a
-                # disjunction of conjunctive pattern groups, unioned
-                # candidate sets (sound superset)
-                groups = (
-                    contains_pattern_groups(where) if where else []
-                )
-            else:
-                from .operators.filters import where_predicate
-
-                pre = where_predicate(where) if where else None
-                groups = []
-            if where_document:
-                docpred = where_document_predicate(where_document)
-                pre = docpred if pre is None else (pre & docpred)
-                pat = where_document.get("$contains")
-                if pat:
-                    from .operators.filters import and_fold_patterns
-
-                    groups = and_fold_patterns(groups, [pat])
-            # a served index searches its OWN stored corpus — the df
-            # argument is unused there, so don't pay the gram-prune
-            # jobs for it (the predicate still applies below scoring)
-            base = (
-                self.df
-                if not isinstance(index, str)
-                else self._prune_by_groups(self.df, groups)
-            )
-            eff_n = n_docs
-            if base is not self.df:
-                # the gram prune engaged: the tier decision and index
-                # sizing must see the frame actually being searched —
-                # a selective pattern can shrink it orders of magnitude
-                # below the corpus (FLAT is then correct and cheaper,
-                # and nlist must never be sized off the full count)
-                eff_n = base.count()
-            decision = None
-            served = None
-            if index == "auto":
-                decision = R.choose_tier(
-                    eff_n, len(qv), k=int(n_results),
-                    target_recall=target_recall,
-                    filtered=pre is not None, tuned=tuned,
-                )
-            elif isinstance(index, str):
-                decision = R.forced_decision(
-                    index, eff_n, k=int(n_results),
-                    target_recall=target_recall, tuned=tuned,
-                )
-            else:
-                served = index
-            return R.routed_search(
-                base, qv, int(n_results), vec_col="embedding",
-                id_col="id", index=served, target_recall=target_recall,
-                # the graph tier's filter rode into `served_allowed`;
-                # the Column form would raise there (router doc)
-                where=None if served_allowed is not None else pre,
-                decision=decision, n_docs=eff_n, allowed=served_allowed,
-            )
-
-        # Pre-filter BELOW the similarity projection (reference
-        # collection.go:521; Catalyst keeps it pushed down).
-        pred = self._combined_predicate_ex(
-            where, where_document, extended_filters
+            return knn_ops.knn_single(plan.frame, qv, n_results)
+        return R.routed_search(
+            plan.frame, qv, int(n_results), vec_col="embedding",
+            id_col="id", index=plan.index, target_recall=target_recall,
+            # a graph serves the filter through `allowed`; the Column
+            # form would raise there (router doc)
+            where=plan.pre if plan.allowed is None else None,
+            decision=plan.decision, allowed=plan.allowed,
         )
-        if extended_filters:
-            from .operators.filters import contains_pattern_groups
-
-            groups = contains_pattern_groups(where)
-        else:
-            groups = []
-        # Gram-index pre-prune for the tree's $contains structure — the
-        # flat where_document key AND-folds into the extended tree's
-        # pattern groups (r8 covered $and leaves; r9 carries the prune
-        # through $or as unioned candidate sets).  No-op without a
-        # fresh index; pred still applies the exact substring verify.
-        if where_document and where_document.get("$contains"):
-            from .operators.filters import and_fold_patterns
-
-            groups = and_fold_patterns(
-                groups, [where_document["$contains"]]
-            )
-        filtered = self._prune_by_groups(self.df, groups).filter(pred)
-
-        if negative_embedding is not None and negative_mode == "filter":
-            return knn_ops.knn_negative_filter(
-                filtered,
-                qv,
-                negative_embedding,
-                n_results,
-                threshold=negative_filter_threshold,
-            )
-        return knn_ops.knn_single(filtered, qv, n_results)
 
     def build_text_index(self, n: int = 3) -> None:
         """Build (and cache) the token-gram posting-list index for
@@ -978,20 +864,6 @@ class Collection:
         self._text_index_n = int(meta.get("n", 3))
         self._text_index_src = self.df
         return True
-
-    def _contains_pruned(self, df: DataFrame, where_document) -> DataFrame:
-        """Back-compat shim over :meth:`_prune_by_patterns` for the
-        flat ``where_document`` form."""
-        pattern = (where_document or {}).get("$contains")
-        return self._prune_by_patterns(df, [pattern] if pattern else [])
-
-    def _prune_by_patterns(self, df: DataFrame, patterns) -> DataFrame:
-        """Gram-index candidate prune for conjunctively-required
-        ``$contains`` patterns — the single-group case of
-        :meth:`_prune_by_groups`."""
-        return self._prune_by_groups(
-            df, [list(patterns)] if patterns else []
-        )
 
     def _prune_by_groups(self, df: DataFrame, groups) -> DataFrame:
         """Gram-index candidate prune for a DISJUNCTION of conjunctive
@@ -1244,24 +1116,17 @@ class Collection:
         keyword ranking, fuse with reciprocal-rank fusion
         (operators/hybrid.py).  Returns (id, rrf_score, lex_rank,
         vec_rank) ordered by fused score."""
-        import re
-
         if not query_text:
             raise ValueError(E.ERR_QUERY_TEXT_EMPTY)
         if self.embedding_func is None:
             raise ValueError("no embedding function configured")
-        if n_results <= 0:
-            raise ValueError(E.ERR_NRESULTS_POSITIVE)
-        n_docs = self.count()
-        if n_results > n_docs:
-            raise ValueError(E.ERR_NRESULTS_TOO_LARGE)
+        n_docs = self._check_n_results(n_results)
         from .operators.hybrid import hybrid_search
 
         qv = self.embedding_func(query_text)
-        terms = re.findall(r"[a-z]+|[0-9]+|[^a-z0-9\s]", query_text.lower())
         return hybrid_search(
             self.df,
-            query_terms=terms,
+            query_terms=_terms(query_text),
             query_vec=qv,
             k=int(n_results),
             depth=depth,
@@ -1283,20 +1148,13 @@ class Collection:
         (operators/hybrid.bm25_scores): tf saturation + document
         length normalization — the keyword side of the stack on its
         own, for no-embedding callers.  Returns (id, bm25) top-n."""
-        import re
-
         if not query_text:
             raise ValueError(E.ERR_QUERY_TEXT_EMPTY)
-        if n_results <= 0:
-            raise ValueError(E.ERR_NRESULTS_POSITIVE)
-        n_docs = self.count()
-        if n_results > n_docs:
-            raise ValueError(E.ERR_NRESULTS_TOO_LARGE)
+        n_docs = self._check_n_results(n_results)
         from .operators.hybrid import bm25_scores
 
-        terms = re.findall(r"[a-z]+|[0-9]+|[^a-z0-9\s]", query_text.lower())
         out = bm25_scores(
-            self.df, terms, k1=k1, b=b,
+            self.df, _terms(query_text), k1=k1, b=b,
             text_col="content", id_col="id", n_docs=n_docs,
         )
         return out.orderBy(F.desc("bm25"), "id").limit(int(n_results))
@@ -1312,20 +1170,13 @@ class Collection:
         (operators/hybrid.prf_search): BM25 feedback docs pick
         expansion terms, the widened query re-runs BM25 — recall
         without embeddings."""
-        import re
-
         if not query_text:
             raise ValueError(E.ERR_QUERY_TEXT_EMPTY)
-        if n_results <= 0:
-            raise ValueError(E.ERR_NRESULTS_POSITIVE)
-        n_docs = self.count()
-        if n_results > n_docs:
-            raise ValueError(E.ERR_NRESULTS_TOO_LARGE)
+        n_docs = self._check_n_results(n_results)
         from .operators.hybrid import prf_search
 
-        terms = re.findall(r"[a-z]+|[0-9]+|[^a-z0-9\s]", query_text.lower())
         return prf_search(
-            self.df, terms, k=int(n_results), fb_docs=fb_docs,
+            self.df, _terms(query_text), k=int(n_results), fb_docs=fb_docs,
             fb_terms=fb_terms, text_col="content", id_col="id",
             n_docs=n_docs,
         )
@@ -1345,10 +1196,7 @@ class Collection:
             raise ValueError(E.ERR_QUERY_TEXT_EMPTY)
         if self.embedding_func is None:
             raise ValueError("no embedding function configured")
-        if n_results <= 0:
-            raise ValueError(E.ERR_NRESULTS_POSITIVE)
-        if n_results > self.count():
-            raise ValueError(E.ERR_NRESULTS_TOO_LARGE)
+        self._check_n_results(n_results)
         from .operators.hybrid import mmr_rerank
 
         qv = self.embedding_func(query_text)
@@ -1419,148 +1267,180 @@ class Collection:
             if self.embedding_func is None:
                 raise ValueError("no embedding function configured")
             query_embeddings = [self.embedding_func(t) for t in query_texts]
-        if len(query_embeddings) == 0:
-            raise ValueError(E.ERR_QUERY_EMBEDDING_EMPTY)
+        qvecs = self._query_vectors(query_embeddings)
         if n_results <= 0:
             raise ValueError(E.ERR_NRESULTS_POSITIVE)
         validate_where_document(where_document)
-        if index is not None and per_query_filters is not None:
-            # r9: filtered batches route too — the IVF tier carries each
-            # query's predicates in its probe join (search_batch_dsl),
-            # so per-query-filtered batches keep cluster pruning at
-            # scale.  Quantized tiers still cannot (codes only).
-            return self._query_batch_routed_dsl(
-                query_embeddings, n_results, per_query_filters,
-                where, where_document, index, target_recall, tuned,
-                extended_filters,
-            )
-        served_allowed = None
-        if (
-            index is not None
-            and not isinstance(index, str)
-            and (where or where_document)
-        ):
-            from .operators import router as R
-
-            if R.tier_of(index) != "ivf":
-                # same rule as query_embedding: a served graph index
-                # serves the global filter as one allowed id-set
-                # shared by the batch (r11); every other non-IVF
-                # served index falls back to the exact kernel path —
-                # semantics beat routing
-                if R.tier_of(index) == "hnsw":
-                    served_allowed = self._materialize_filter_ids(
-                        where, where_document, extended_filters
-                    )
-                if served_allowed is None:
-                    index = None
-        if index is not None:
-            from .operators import router as R
-
-            qids = [str(i) for i in range(len(query_embeddings))]
-            qvecs = [[float(x) for x in q] for q in query_embeddings]
-            pre = (
-                self._combined_predicate_ex(
-                    where, where_document, extended_filters
-                )
-                if (where or where_document)
-                else None
-            )
-            groups = self._global_contains_groups(
-                where, where_document, extended_filters
-            )
-            decision = None
-            served = None
-            n_docs = None
-            if isinstance(index, str):
-                # served objects search their own stored corpus: the
-                # count and the gram-prune jobs are only paid when a
-                # tier is being chosen/built over the collection table
-                base = self._prune_by_groups(self.df, groups)
-                # when the gram prune engaged, size the tier decision
-                # on the pruned frame, not the full corpus (same rule
-                # as query_embedding)
-                n_docs = (
-                    base.count() if base is not self.df else self.count()
-                )
-                if index == "auto":
-                    decision = R.choose_tier(
-                        n_docs, len(qvecs[0]), k=int(n_results),
-                        target_recall=target_recall,
-                        filtered=pre is not None, tuned=tuned,
-                    )
-                else:
-                    decision = R.forced_decision(
-                        index, n_docs, k=int(n_results),
-                        target_recall=target_recall, tuned=tuned,
-                    )
-            else:
-                base = self.df
-                served = index
+        parsed = (
+            None
+            if per_query_filters is None
+            else self._parse_per_query_filters(per_query_filters, len(qvecs))
+        )
+        qids = [str(i) for i in range(len(qvecs))]
+        k = int(n_results)
+        plan = self._plan_query(
+            index, k, len(qvecs[0]), where, where_document,
+            extended_filters, target_recall, tuned, parsed=parsed,
+        )
+        tier = plan.decision["tier"] if plan.decision else None
+        if parsed is None:
+            if tier is None:
+                return knn_ops.knn_block(plan.frame, qids, qvecs, k)
             return R.routed_search_batch(
-                base, qids, qvecs, int(n_results), vec_col="embedding",
-                id_col="id", index=served, target_recall=target_recall,
-                # the graph tier's filter rode into `served_allowed`
-                # (the Column form would raise there — router doc)
-                where=None if served_allowed is not None else pre,
-                decision=decision, n_docs=n_docs,
-                allowed=served_allowed,
+                plan.frame, qids, qvecs, k, vec_col="embedding",
+                id_col="id", index=plan.index, target_recall=target_recall,
+                where=plan.pre if plan.allowed is None else None,
+                decision=plan.decision, allowed=plan.allowed,
             )
-        pred = self._combined_predicate_ex(
-            where, where_document, extended_filters
-        )
-        gg = self._global_contains_groups(
-            where, where_document, extended_filters
-        )
-        if per_query_filters is None:
-            return knn_ops.knn_block(
-                self._prune_by_groups(self.df, gg).filter(pred),
-                [str(i) for i in range(len(query_embeddings))],
-                [[float(x) for x in q] for q in query_embeddings],
-                int(n_results),
+        if tier == "hnsw":
+            return plan.index.search_batch(
+                self.spark, qids, qvecs, k, ef=plan.decision["ef"],
+                allowed_per_query=plan.allowed,
             )
-        parsed = self._parse_per_query_filters(
-            per_query_filters, len(query_embeddings)
-        )
-        # ONE prune for both constraint sets (global x per-query
-        # groups, capped cross-product) — same fold the routed path
-        # uses; two sequential prunes would pay the posting scan twice
-        from .operators.filters import and_fold_groups
+        if tier in (None, "flat") or plan.n_docs == 0:
+            # an empty constrained corpus answers empty on every tier —
+            # same guard as the router's on-the-fly build path
+            return self._query_batch_flat_dsl(
+                qids, qvecs, k, parsed, plan.frame
+            )
+        if plan.index is not None:
+            return plan.index.search_batch_dsl(
+                qids, qvecs, k, parsed, nprobe=plan.decision["nprobe"],
+                where=plan.pre, metadata_col="metadata", text_col="content",
+            )
+        from .operators.ann import IVFIndex
 
-        per_q = [list(c) for (_w, c, _nc) in parsed]
-        total = and_fold_groups(
-            gg, per_q if (per_q and all(per_q)) else []
+        idx = IVFIndex.build(
+            plan.frame, n_clusters=plan.decision["n_clusters"],
+            vec_col="embedding", id_col="id",
         )
-        return self._query_batch_flat_dsl(
-            [str(i) for i in range(len(query_embeddings))],
-            [[float(x) for x in q] for q in query_embeddings],
-            n_results, parsed,
-            self._prune_by_groups(self.df, total).filter(pred),
+        return idx.search_batch_dsl(
+            qids, qvecs, k, parsed, nprobe=plan.decision["nprobe"],
+            metadata_col="metadata", text_col="content",
         )
 
     @staticmethod
-    def _global_contains_groups(
-        where, where_document, extended_filters: bool
-    ) -> list:
-        """The gram-prunable ``$contains`` group structure of the
-        GLOBAL batch filters: the extended tree's DNF groups (r9)
-        AND-folded with the flat ``where_document`` pattern — one
-        composition shared by every query_batch path."""
-        from .operators.filters import (
-            and_fold_patterns,
-            contains_pattern_groups,
-        )
+    def _query_vectors(vectors) -> list[list[float]]:
+        """Query vectors as float lists, rejected before any Spark job
+        when one is empty or their lengths differ."""
+        if len(vectors) == 0 or any(v is None or len(v) == 0 for v in vectors):
+            raise ValueError(E.ERR_QUERY_EMBEDDING_EMPTY)
+        qvecs = [[float(x) for x in v] for v in vectors]
+        lengths = sorted({len(v) for v in qvecs})
+        if len(lengths) > 1:
+            raise ValueError(
+                f"query embeddings must all have one length; got lengths "
+                f"{lengths}"
+            )
+        return qvecs
 
+    def _check_n_results(self, n_results) -> int:
+        """The golden ``n_results`` checks; returns the document count
+        the upper bound was checked against."""
+        if n_results <= 0:
+            raise ValueError(E.ERR_NRESULTS_POSITIVE)
+        n_docs = self.count()
+        if n_results > n_docs:
+            raise ValueError(E.ERR_NRESULTS_TOO_LARGE)
+        return n_docs
+
+    def _plan_query(
+        self, index, k: int, dim: int, where, where_document,
+        extended_filters: bool, target_recall: float, tuned: dict | None,
+        parsed: list | None = None, n_docs: int | None = None,
+    ) -> _QueryPlan:
+        """Plan one vector call: filter compilation, gram-index prune,
+        served-index rule, effective n and tier decision, in that order.
+        ``parsed`` holds a batch's per-query filters
+        (:meth:`_parse_per_query_filters`); ``n_docs`` is the count the
+        caller already paid for, if any.  Spark jobs run here only
+        where the rules below say so.
+
+        - **Exact** (``index=None``, or a requested index that cannot
+          serve the filter): the ``$contains`` groups gram-prune the
+          corpus when a fresh text index exists (the flat
+          ``where_document`` pattern AND-folds into the extended tree's
+          groups, carried through ``$or`` as unioned candidate sets),
+          then the predicate runs below scoring (reference
+          collection.go:521).  Per-query ``$contains`` lists fold into
+          the same prune as a capped cross-product, so the posting
+          table is scanned once.  The exact substring verify always
+          runs; pruning only shrinks the rows it runs over.
+        - **Served index**: it searches its own stored corpus, so the
+          plan pays no prune and no count.  The flat-vector IVF tier
+          applies a filter below scoring inside the probed partitions
+          (per-query filters in its probe join).  A graph serves a
+          global filter as one materialized id set (``allowed``; one
+          collect job) unless more than ``HNSW_FILTER_MAX_IDS`` ids
+          match: beyond that the set costs more to ship than the scan
+          saves.  It serves per-query filters as per-query sets from
+          one mask scan only at ``HNSW_BATCH_FILTER_MIN_POINTS`` points
+          or more, since below that SCALE.md measured the FLAT DSL
+          kernel faster; over the shipping budget it falls back too.
+          SQ8/PQ codes cannot evaluate a predicate, so a filtered call
+          on them falls back to the exact path — semantics beat
+          routing.  Every fallback is named in ``fallback``.
+        - **Tier name or ``"auto"``**: the decision is sized on the
+          frame actually searched, because a selective pattern can
+          shrink it far below the corpus and ``nlist`` must never be
+          sized off the full count.  That is the caller's count while
+          nothing pruned, else one count of the pruned frame.  A
+          per-query-filtered batch sizes on the globally filtered frame
+          and decides with ``filtered=True`` (FLAT or IVF); otherwise
+          the global predicate runs below scoring in the tier.  A
+          filtered call that forces a quantized tier raises: codes
+          carry no metadata."""
+        df = self.df
+        pred = self._combined_predicate_ex(
+            where, where_document, extended_filters
+        )
+        pre = pred if (where or where_document) else None
+        fallback = None
+        if index is not None and not isinstance(index, str):
+            tier = R.tier_of(index)
+            decision = R._decide(index, n_docs, dim, k, target_recall)
+            if tier == "ivf" or (pre is None and parsed is None):
+                return _QueryPlan(pre, df, n_docs, index, decision, None, None)
+            allowed = None
+            if tier != "hnsw":
+                fallback = f"served {tier} index cannot apply a filter"
+            elif parsed is None:
+                allowed = self._materialize_filter_ids(pred)
+                fallback = "filter matches over HNSW_FILTER_MAX_IDS ids"
+            elif index.n_points() < int(self.HNSW_BATCH_FILTER_MIN_POINTS):
+                fallback = "graph below HNSW_BATCH_FILTER_MIN_POINTS"
+            else:
+                allowed = self._materialize_per_query_ids(parsed, pre)
+                fallback = "per-query id sets over HNSW_FILTER_MAX_IDS"
+            if allowed is not None:
+                return _QueryPlan(pre, df, n_docs, index, decision, allowed, None)
+            index = None
         groups = (
             contains_pattern_groups(where)
             if (extended_filters and where)
             else []
         )
         if where_document and where_document.get("$contains"):
-            groups = and_fold_patterns(
-                groups, [where_document["$contains"]]
+            groups = and_fold_patterns(groups, [where_document["$contains"]])
+        if parsed is not None:
+            per_q = [list(c) for (_w, c, _nc) in parsed]
+            groups = and_fold_groups(groups, per_q if all(per_q) else [])
+        frame = self._prune_by_groups(df, groups)
+        if index is None:
+            return _QueryPlan(
+                pre, frame.filter(pred), None, None, None, None, fallback
             )
-        return groups
+        if parsed is not None:
+            frame = frame.filter(pred)
+        if n_docs is None or frame is not df:
+            n_docs = frame.count()
+        filtered = pre is not None or parsed is not None
+        decision = R._decide(
+            index, n_docs, dim, k, target_recall, filtered, tuned
+        )
+        if filtered and decision["tier"] in ("ivf_sq", "ivf_pq"):
+            raise ValueError(R._filtered_tier_error(decision["tier"]))
+        return _QueryPlan(pre, frame, n_docs, None, decision, None, None)
 
     @staticmethod
     def _parse_per_query_filters(per_query_filters, n_queries: int):
@@ -1613,142 +1493,10 @@ class Collection:
             id_col="id",
         )
 
-    def _query_batch_routed_dsl(
-        self, query_embeddings, n_results, per_query_filters,
-        where, where_document, index, target_recall, tuned,
-        extended_filters: bool = False,
-    ) -> DataFrame:
-        """Per-query-filtered batch through the router ladder (r9).
 
-        One tier decision for the whole batch, ``filtered=True`` (the
-        quantized tiers carry codes only, so the ladder lands on FLAT
-        or IVF): FLAT dispatches the broadcast-join DSL kernel; IVF
-        threads each query's predicates into the probe join
-        (:meth:`..operators.ann.IVFIndex.search_batch_dsl`), keeping
-        cluster pruning under per-query filters.  Forcing a quantized
-        tier with filters is a contradiction and raises the golden
-        error; a served GRAPH index serves the filters as per-query
-        allowed id-sets (r11, one materializing scan — budget-capped
-        with the FLAT kernel as the fallback), and any other served
-        non-IVF index falls back to the FLAT kernel — semantics beat
-        routing.  Global ``where``/``where_document`` apply to the
-        corpus side on every path."""
-        from .operators import router as R
-        from .operators.ann import IVFIndex
-
-        parsed = self._parse_per_query_filters(
-            per_query_filters, len(query_embeddings)
-        )
-        qids = [str(i) for i in range(len(query_embeddings))]
-        qvecs = [[float(x) for x in q] for q in query_embeddings]
-        pre = self._combined_predicate_ex(
-            where, where_document, extended_filters
-        )
-        constrained = bool(where or where_document)
-        base = self.df.filter(pre) if constrained else self.df
-
-        def prune():
-            # ONE prune covers the global tree's groups AND the
-            # per-query contains lists (cross-product, capped — both
-            # constraint sets are required, so their AND-fold is sound
-            # and tighter).  Deferred (r10, ADVICE): apply_candidate_
-            # prune runs an eager limit+collect job over the posting
-            # table, and the served-IVF branch never uses the pruned
-            # frame — compute it only on the paths that do.
-            from .operators.filters import and_fold_groups
-
-            per_q = [list(c) for (_w, c, _nc) in parsed]
-            total_groups = and_fold_groups(
-                self._global_contains_groups(
-                    where, where_document, extended_filters
-                ),
-                per_q if (per_q and all(per_q)) else [],
-            )
-            return self._prune_by_groups(base, total_groups)
-
-        if not isinstance(index, str):
-            if R.tier_of(index) != "ivf":
-                use_graph_filters = R.tier_of(index) == "hnsw" and (
-                    self.HNSW_BATCH_FILTER_PREFER_GRAPH
-                    or index.n_points()
-                    >= int(self.HNSW_BATCH_FILTER_MIN_POINTS)
-                )
-                if use_graph_filters:
-                    # r11: per-query filters serve FROM the graph —
-                    # one corpus scan materializes every query's
-                    # (global AND per-query) match set, the walks gate
-                    # result eligibility per query (hnsw.py
-                    # allowed_per_query).  Over the shipping budget →
-                    # the exact kernel below, as before.  r13: this
-                    # path is OPT-IN below HNSW_BATCH_FILTER_MIN_POINTS
-                    # — the measured default is the FLAT kernel (see
-                    # the constants' docstrings; SCALE.md corpus-size
-                    # sweep), because the materializing mask scan is
-                    # itself corpus-bounded and lost at every measured
-                    # size.  Callers holding precomputed allowed sets
-                    # keep the ef-bounded graph path via
-                    # search_batch(allowed_per_query=...).
-                    apq = self._materialize_per_query_ids(
-                        parsed, pre if constrained else None
-                    )
-                    if apq is not None:
-                        ef = (
-                            index.n_points()
-                            if target_recall >= 0.999
-                            else max(4 * int(n_results), 64)
-                        )
-                        return index.search_batch(
-                            self.spark, qids, qvecs, int(n_results),
-                            ef=ef, allowed_per_query=apq,
-                        )
-                # served index that can't express the filter: exact path
-                return self._query_batch_flat_dsl(
-                    qids, qvecs, n_results, parsed, prune()
-                )
-            nprobe = R._nprobe(len(index.centroids), target_recall)
-            return index.search_batch_dsl(
-                qids, qvecs, int(n_results), parsed, nprobe=nprobe,
-                where=pre if (where or where_document) else None,
-                metadata_col="metadata", text_col="content",
-            )
-        filtered = prune()
-        pruned = filtered is not base
-        # size the decision on the frame actually searched: the global
-        # predicate and the per-query gram prune can shrink it orders
-        # of magnitude below the corpus (same eff_n rule as
-        # query_embedding — nlist must never be sized off the full
-        # count).  The count job is only paid when something actually
-        # constrained the frame.
-        eff_n = (
-            filtered.count() if (constrained or pruned) else self.count()
-        )
-        if index == "auto":
-            decision = R.choose_tier(
-                eff_n, len(qvecs[0]), k=int(n_results),
-                target_recall=target_recall, filtered=True, tuned=tuned,
-            )
-        else:
-            decision = R.forced_decision(
-                index, eff_n, k=int(n_results),
-                target_recall=target_recall, tuned=tuned,
-            )
-        if decision["tier"] in ("ivf_sq", "ivf_pq"):
-            raise ValueError(R._filtered_tier_error(decision["tier"]))
-        if decision["tier"] == "flat" or eff_n == 0:
-            # an empty constrained corpus answers empty on every tier —
-            # same guard as the router's on-the-fly build path
-            return self._query_batch_flat_dsl(
-                qids, qvecs, n_results, parsed, filtered
-            )
-        idx = IVFIndex.build(
-            filtered, n_clusters=decision["n_clusters"],
-            vec_col="embedding", id_col="id",
-        )
-        return idx.search_batch_dsl(
-            qids, qvecs, int(n_results), parsed,
-            nprobe=decision["nprobe"],
-            metadata_col="metadata", text_col="content",
-        )
+def _terms(text: str) -> list[str]:
+    """The lexical entry points' query tokenizer."""
+    return re.findall(r"[a-z]+|[0-9]+|[^a-z0-9\s]", text.lower())
 
 
 def _rmtree(path: str) -> None:

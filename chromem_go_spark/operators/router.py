@@ -3,9 +3,11 @@
 A vector query runs on one of five tiers: brute-force FLAT (``knn``),
 the three IVF tiers (one core, ``ann.IVF_CLASSES``) or a served HNSW
 graph.  :func:`choose_tier` encodes the choice as an inspectable
-decision, sized by one operating-point function; one decision step
-serves :func:`routed_search` and :func:`routed_search_batch`, which the
-``Collection.query_embedding(index="auto")`` surface wraps.
+decision, sized by one operating-point function; :func:`_decide` turns
+``"auto"``, a tier name or a served index into that decision.  One
+decision step serves :func:`routed_search` and
+:func:`routed_search_batch`; ``Collection._plan_query`` calls
+:func:`_decide` and dispatches through them.
 
 Tier ladder and DOCUMENTED thresholds (all overridable per call):
 
@@ -164,6 +166,33 @@ def forced_decision(
     )
 
 
+def _decide(
+    index, n_docs: int | None, dim: int, k: int, target_recall: float,
+    filtered: bool = False, tuned: dict | None = None,
+) -> dict:
+    """The decision for ``index``: ``"auto"`` walks the ladder over the
+    effective ``n_docs``, a tier name forces that tier, and a served
+    index object gets its own operating point.  A served graph's
+    ``ef`` follows the recall target, >= 0.999 walking exhaustively."""
+    if not isinstance(index, str):
+        tier = tier_of(index)
+        if tier == "hnsw":
+            ef = index.n_points() if target_recall >= 0.999 else max(4 * k, 64)
+            return {"tier": tier, "ef": ef}
+        return _operating_point(
+            tier, "served index available", len(index.centroids), k,
+            target_recall,
+        )
+    if index == "auto":
+        return choose_tier(
+            n_docs, dim, k=k, target_recall=target_recall,
+            filtered=filtered, tuned=tuned,
+        )
+    return forced_decision(
+        index, n_docs, k=k, target_recall=target_recall, tuned=tuned
+    )
+
+
 def _filtered_tier_error(tier: str) -> str:
     if tier == "hnsw":
         return (
@@ -230,9 +259,7 @@ def _route(
     decision, n_docs, allowed, thresholds,
 ):
     """The decision step both entry points share (see
-    :func:`routed_search`); a served graph's ``ef`` follows the recall
-    target, >= 0.999 walking exhaustively.  Returns ``(index,
-    decision)``."""
+    :func:`routed_search`).  Returns ``(index, decision)``."""
     if allowed is not None and (
         # isinstance first (r12, ADVICE): a string tier name must hit
         # THIS ValueError, not tier_of's "not a served ANN index"
@@ -248,13 +275,7 @@ def _route(
         tier = tier_of(index)
         if where is not None and tier != "ivf":
             raise ValueError(_filtered_tier_error(tier))
-        if tier == "hnsw":
-            ef = index.n_points() if target_recall >= 0.999 else max(4 * k, 64)
-            return index, {"tier": tier, "ef": ef}
-        return index, _operating_point(
-            tier, "served index available", len(index.centroids), k,
-            target_recall,
-        )
+        return index, _decide(index, n_docs, dim, k, target_recall)
     if decision is None:
         if n_docs is None:
             n_docs = df.count()
@@ -293,7 +314,7 @@ def routed_search(
     pre-filter Column — it forces a full-vector tier.  ``allowed``
     (r11) is the GRAPH tier's filter form: the where-predicate's
     matching ids, already materialized to a bounded set (the caller —
-    collection.query_embedding — pays that one job and enforces the
+    ``Collection._plan_query`` — pays that one job and enforces the
     cap); served HNSW walks gate result eligibility on it (hnsw.py
     module doc) instead of raising the filtered-tier error.  Returns
     rows with ``similarity``, highest first (quantized tiers return

@@ -54,6 +54,9 @@ def test_add_columnar_validation(db):
         c.add(["1", "2"], contents=["a"])
     c.add(["1", "2"], metadatas=[{"a": "b"}, {"c": "d"}], contents=["hello", "world"])
     assert c.count() == 2
+    # integer components are accepted like floats
+    c.add(["3"], embeddings=[[1.0, 0, 0]])
+    assert c.get_by_id("3").embedding == pytest.approx([1.0, 0.0, 0.0])
 
 
 def test_query_filters_and_ranking(db):
@@ -632,3 +635,179 @@ def test_delete_extended_filters(spark):
         extended_filters=True,
     )
     assert sorted(c.list_ids()) == ["1"]
+
+
+def test_query_batch_rejects_malformed_vectors_before_spark(spark, db):
+    """An empty or ragged query batch raises ValueError on the driver,
+    on the exact and the routed path, before any Spark job starts."""
+    c = db.create_collection("malformed", embedding_func=const_embedding)
+    c.add_documents(two_docs())
+    sc = spark.sparkContext
+    for index in (None, "auto"):
+        group = f"malformed-{index}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="queryEmbedding is empty"):
+                c.query_batch(query_embeddings=[[]], index=index)
+            with pytest.raises(ValueError, match=r"lengths \[1, 3\]"):
+                c.query_batch(
+                    query_embeddings=[[1.0, 0.0, 0.0], [1.0]], index=index
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+# ------------------------------------------------- the query plan record
+
+
+@pytest.fixture(scope="module")
+def planned(spark):
+    """40 docs, d=8, with a served IVF, SQ8 and HNSW index each."""
+    import numpy as np
+
+    c = DB(spark).create_collection("planned", embedding_func=const_embedding)
+    rng = np.random.default_rng(11)
+    mat = rng.standard_normal((40, 8))
+    c.add_documents(
+        [
+            Document(
+                str(i), {"lang": "en" if i % 2 == 0 else "de"},
+                [float(x) for x in mat[i]],
+                f"quick fox {i}" if i % 3 == 0 else f"lazy dog {i}",
+            )
+            for i in range(40)
+        ]
+    )
+    q = [float(x) for x in mat[5] + 0.1]
+    served = {
+        "ivf": c.build_ann_index(n_clusters=4),
+        "ivf_sq": c.build_ann_index(n_clusters=4, kind="ivf_sq"),
+        "hnsw": c.build_hnsw_index(M=4, ef_construction=32),
+    }
+    return c, q, served
+
+
+def _plan(c, index, q, k=3, where=None, target_recall=0.999, **kw):
+    return c._plan_query(
+        index, k, len(q), where, None, False, target_recall, None, **kw
+    )
+
+
+def _assert_same_rows(got, want):
+    """Equal (query_id, id) rows; similarities to float32 precision
+    (the graph scores in float32, the exact scan in float64)."""
+    def rows(df):
+        return sorted(
+            (d.get("query_id", ""), d["id"], d["similarity"])
+            for d in (r.asDict() for r in df.collect())
+        )
+
+    g, w = rows(got), rows(want)
+    assert [r[:2] for r in g] == [r[:2] for r in w]
+    assert [r[2] for r in g] == pytest.approx([r[2] for r in w], abs=1e-5)
+
+
+def test_plan_exact(planned):
+    c, q, _ = planned
+    plan = _plan(c, None, q)
+    assert (plan.pre, plan.n_docs, plan.index, plan.decision,
+            plan.allowed, plan.fallback) == (None,) * 6
+    assert plan.frame.count() == 40
+
+
+def test_plan_auto_flat(planned):
+    c, q, _ = planned
+    plan = _plan(c, "auto", q, n_docs=40)
+    assert plan.decision["tier"] == "flat"
+    assert (plan.n_docs, plan.index, plan.allowed, plan.fallback) == (
+        40, None, None, None
+    )
+    _assert_same_rows(
+        c.query_embedding(q, 3, index="auto"), c.query_embedding(q, 3)
+    )
+
+
+def test_plan_forced_ivf(planned):
+    c, q, _ = planned
+    plan = _plan(c, "ivf", q)
+    assert plan.n_docs == 40  # counted: no caller count was given
+    assert plan.decision["tier"] == "ivf"
+    assert plan.decision["nprobe"] == plan.decision["n_clusters"] == 8
+    assert (plan.index, plan.allowed, plan.fallback) == (None, None, None)
+    _assert_same_rows(
+        c.query_embedding(q, 3, index="ivf", target_recall=0.999),
+        c.query_embedding(q, 3),
+    )
+
+
+def test_plan_served_ivf_where(planned):
+    c, q, served = planned
+    plan = _plan(c, served["ivf"], q, where={"lang": "en"})
+    assert plan.index is served["ivf"] and plan.pre is not None
+    assert plan.decision["tier"] == "ivf" and plan.decision["nprobe"] == 4
+    assert (plan.n_docs, plan.allowed, plan.fallback) == (None, None, None)
+    _assert_same_rows(
+        c.query_embedding(
+            q, 3, where={"lang": "en"}, index=served["ivf"],
+            target_recall=0.999,
+        ),
+        c.query_embedding(q, 3, where={"lang": "en"}),
+    )
+
+
+def test_plan_served_hnsw_where_sets_allowed(planned):
+    c, q, served = planned
+    plan = _plan(c, served["hnsw"], q, where={"lang": "en"})
+    assert plan.index is served["hnsw"] and plan.fallback is None
+    assert plan.decision == {"tier": "hnsw", "ef": 40}
+    assert plan.allowed == {str(i) for i in range(0, 40, 2)}
+    _assert_same_rows(
+        c.query_embedding(
+            q, 3, where={"lang": "en"}, index=served["hnsw"],
+            target_recall=0.999,
+        ),
+        c.query_embedding(q, 3, where={"lang": "en"}),
+    )
+
+
+def test_plan_served_hnsw_over_id_cap_falls_back(planned, monkeypatch):
+    c, q, served = planned
+    monkeypatch.setattr(Collection, "HNSW_FILTER_MAX_IDS", 2)
+    plan = _plan(c, served["hnsw"], q, where={"lang": "en"})
+    assert "HNSW_FILTER_MAX_IDS" in plan.fallback
+    assert (plan.index, plan.decision, plan.allowed) == (None, None, None)
+    routed = c.query_embedding(
+        q, 3, where={"lang": "en"}, index=served["hnsw"]
+    )
+    exact = c.query_embedding(q, 3, where={"lang": "en"})
+    assert routed.columns == exact.columns  # the exact scan's row shape
+    _assert_same_rows(routed, exact)
+
+
+def test_plan_served_sq8_where_falls_back(planned):
+    c, q, served = planned
+    plan = _plan(c, served["ivf_sq"], q, where={"lang": "de"})
+    assert "ivf_sq" in plan.fallback
+    assert (plan.index, plan.decision, plan.allowed) == (None, None, None)
+    _assert_same_rows(
+        c.query_embedding(q, 3, where={"lang": "de"}, index=served["ivf_sq"]),
+        c.query_embedding(q, 3, where={"lang": "de"}),
+    )
+
+
+def test_plan_per_query_filters_auto(planned):
+    c, q, _ = planned
+    pqf = [{"where_document": {"$contains": "fox"}}, None]
+    parsed = c._parse_per_query_filters(pqf, 2)
+    plan = _plan(c, "auto", q, where={"lang": "en"}, parsed=parsed)
+    # sized on the globally filtered frame, decided as filtered
+    assert plan.n_docs == 20 and plan.frame.count() == 20
+    assert plan.decision["tier"] == "flat"
+    assert (plan.index, plan.allowed, plan.fallback) == (None, None, None)
+    kw = dict(
+        query_embeddings=[q, q], n_results=3, where={"lang": "en"},
+        per_query_filters=pqf,
+    )
+    _assert_same_rows(c.query_batch(index="auto", **kw), c.query_batch(**kw))

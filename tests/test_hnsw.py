@@ -2126,15 +2126,13 @@ def test_collection_batch_per_query_filters_served_graph(spark, monkeypatch):
     """Per-query filters on a served graph materialize per-query id
     sets in ONE scan and serve from the walks — values equal the flat
     DSL kernel's, and the graph path actually ran (call-counted).
-    r13: the graph path is OPT-IN below HNSW_BATCH_FILTER_MIN_POINTS
-    (the measured default is FLAT — SCALE.md corpus-size sweep), so
-    this test opts in explicitly."""
+    The graph path serves only from HNSW_BATCH_FILTER_MIN_POINTS (the
+    measured default is FLAT — SCALE.md corpus-size sweep), so this
+    test lowers that threshold to 0."""
     from chromem_go_spark.collection import Collection
     from chromem_go_spark.operators.hnsw import HNSWIndex
 
-    monkeypatch.setattr(
-        Collection, "HNSW_BATCH_FILTER_PREFER_GRAPH", True
-    )
+    monkeypatch.setattr(Collection, "HNSW_BATCH_FILTER_MIN_POINTS", 0)
     c = _filter_collection(spark, "hnsw_batch_pqf")
     served = c.build_hnsw_index(M=4, ef_construction=32)
     pqf = [
@@ -2209,12 +2207,10 @@ def test_collection_batch_per_query_filters_default_flat(
 def test_collection_batch_per_query_budget_falls_back(spark, monkeypatch):
     """Beyond the shipping budget the per-query-filtered batch falls
     back to the exact FLAT DSL kernel with identical values (graph
-    path opted in, r13)."""
+    path enabled by a zero HNSW_BATCH_FILTER_MIN_POINTS)."""
     from chromem_go_spark.collection import Collection
 
-    monkeypatch.setattr(
-        Collection, "HNSW_BATCH_FILTER_PREFER_GRAPH", True
-    )
+    monkeypatch.setattr(Collection, "HNSW_BATCH_FILTER_MIN_POINTS", 0)
     c = _filter_collection(spark, "hnsw_batch_pqf_cap")
     served = c.build_hnsw_index(M=4, ef_construction=32)
     monkeypatch.setattr(Collection, "HNSW_FILTER_MAX_IDS", 2)
@@ -2606,12 +2602,11 @@ def test_mask_scan_budget_with_unfiltered_query(spark, monkeypatch):
     blow the shipping budget silently — the materializer declines and
     the flat kernel serves (review: lit(True) used to pass every
     corpus row into the collect before any budget check).  Graph path
-    opted in (r13 — the default routes FLAT before materializing)."""
+    enabled by a zero HNSW_BATCH_FILTER_MIN_POINTS (the default routes
+    FLAT before materializing)."""
     from chromem_go_spark.collection import Collection
 
-    monkeypatch.setattr(
-        Collection, "HNSW_BATCH_FILTER_PREFER_GRAPH", True
-    )
+    monkeypatch.setattr(Collection, "HNSW_BATCH_FILTER_MIN_POINTS", 0)
     c = _filter_collection(spark, "hnsw_pqf_mixed")
     served = c.build_hnsw_index(M=4, ef_construction=32)
     monkeypatch.setattr(Collection, "HNSW_FILTER_MAX_IDS", 4)

@@ -565,16 +565,17 @@ def measure_maskscan(spark, d: str) -> dict:
         qrows = emb.filter(F.col("vec_id") < 512).collect()
         qvecs = [list(r["embedding"]) for r in qrows]
         old_cap = Collection.HNSW_BATCH_FILTER_MAX_QUERIES
-        old_pref = Collection.HNSW_BATCH_FILTER_PREFER_GRAPH
+        old_min = Collection.HNSW_BATCH_FILTER_MIN_POINTS
         for q in (64, 256, 512):
             pqf = [
                 {"where": {"source": f"src{i % 20}"}} for i in range(q)
             ]
             try:
                 Collection.HNSW_BATCH_FILTER_MAX_QUERIES = 10_000
-                # r13: the graph mask-scan path is opt-in now — this
-                # measurement IS the evidence behind that default
-                Collection.HNSW_BATCH_FILTER_PREFER_GRAPH = True
+                # the graph mask-scan path serves only from
+                # HNSW_BATCH_FILTER_MIN_POINTS — this measurement IS the
+                # evidence behind that default
+                Collection.HNSW_BATCH_FILTER_MIN_POINTS = 0
                 t_graph, _ = _time(
                     lambda: c.query_batch(
                         query_embeddings=qvecs[:q], n_results=10,
@@ -583,7 +584,7 @@ def measure_maskscan(spark, d: str) -> dict:
                 )
             finally:
                 Collection.HNSW_BATCH_FILTER_MAX_QUERIES = old_cap
-                Collection.HNSW_BATCH_FILTER_PREFER_GRAPH = old_pref
+                Collection.HNSW_BATCH_FILTER_MIN_POINTS = old_min
             t_flat, _ = _time(
                 lambda: c.query_batch(
                     query_embeddings=qvecs[:q], n_results=10,
@@ -682,9 +683,9 @@ def measure_maskcross(spark, d: str) -> dict:
             pqf = [
                 {"where": {"source": f"src{i % 20}"}} for i in range(64)
             ]
-            old_pref = Collection.HNSW_BATCH_FILTER_PREFER_GRAPH
+            old_min = Collection.HNSW_BATCH_FILTER_MIN_POINTS
             try:
-                Collection.HNSW_BATCH_FILTER_PREFER_GRAPH = True
+                Collection.HNSW_BATCH_FILTER_MIN_POINTS = 0
                 t_graph, _ = _time(
                     lambda: c.query_batch(
                         query_embeddings=qvecs, n_results=10,
@@ -692,7 +693,7 @@ def measure_maskcross(spark, d: str) -> dict:
                     ).collect()
                 )
             finally:
-                Collection.HNSW_BATCH_FILTER_PREFER_GRAPH = old_pref
+                Collection.HNSW_BATCH_FILTER_MIN_POINTS = old_min
             t_flat, _ = _time(
                 lambda: c.query_batch(
                     query_embeddings=qvecs, n_results=10,
@@ -1536,8 +1537,8 @@ def render(here: str, results: list[dict]) -> None:
             "and FLAT stays ahead at every measured size.  This is",
             "the evidence behind the r13 routing default",
             "(`Collection.HNSW_BATCH_FILTER_MIN_POINTS`, set above",
-            "the single-graph cap = FLAT by default, graph opt-in via",
-            "`HNSW_BATCH_FILTER_PREFER_GRAPH`).  The graph filter",
+            "the single-graph cap = FLAT unless the graph is that",
+            "large).  The graph filter",
             "path's real home is caller-SUPPLIED allowed sets",
             "(`search_batch(allowed_per_query=...)`) — no",
             "materializing scan, ef-bounded walks — which is exactly",
